@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -34,7 +36,10 @@ import graft.sources.AccessLog
   */
 object Main {
 
-  val LogTasks: Map[String, (DataFrame => DataFrame, String, String)] = Map(
+  /** The seven `randapachelog` tasks: query, key column, value column
+    * (declaration order kept — the ratio ladder runs them in this order).
+    */
+  val LogTasks: Map[String, (DataFrame => DataFrame, String, String)] = ListMap(
     "hack" -> ((p: DataFrame) => RQ.clfHack(p), "host", "cnt"),
     "host" -> ((p: DataFrame) => RQ.clfHost(p), "host", "cnt"),
     "dateweek" -> ((p: DataFrame) => RQ.clfDateweek(p), "dateweek", "cnt"),

@@ -78,18 +78,12 @@ object RatioLadder {
   def families(spark: SparkSession, sfDir: String): Seq[Family] = {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val events = Tables.events(spark, sfDir)
-    def clf(q: DataFrame => DataFrame): DataFrame => DataFrame =
-      e => q(RQ.clfParsed(e))
+    val logTasks = Main.LogTasks.toSeq.map { case (task, (q, key, countCol)) =>
+      Family(s"log_$task", events, e => q(RQ.clfParsed(e)), key, countCol)
+    }
     Seq(
       Family("wordcount", docs, RQ.wordCount(_), "word"),
-      Family("charcount", docs, RQ.charCount(_), "ch"),
-      Family("log_hack", events, clf(RQ.clfHack), "host"),
-      Family("log_host", events, clf(RQ.clfHost), "host"),
-      Family("log_dateweek", events, clf(RQ.clfDateweek), "dateweek"),
-      Family("log_size", events, clf(RQ.clfSize), "bucket"),
-      Family("log_totalsize", events, clf(RQ.clfTotalsize), "key", countCol = "total"),
-      Family("log_pagesize", events, clf(RQ.clfPagesize), "page", countCol = "total"),
-      Family("log_page", events, clf(RQ.clfPage), "page"),
+      Family("charcount", docs, RQ.charCount(_), "ch")) ++ logTasks ++ Seq(
       Family("wireless", events, RQ.wirelessLinks(_), "link"),
       // the curation-layer AQP families (beyond the reference's surface):
       // quality histogram + corpus token total under the same ladder
@@ -219,93 +213,65 @@ object RatioLadder {
       .select(col("__r.*"))
   }
 
-  /** DuckDB replay of [[wordcountLadderU]] — same keeps, same integer
-    * comparator arithmetic, same T4 chain, rung per UNION branch.
-    */
-  def wordcountLadderUOracleSql: String = {
-    import graft.sampling.{Stats, UniverseSampled}
-    val wcFrom = (cond: String) =>
-      RQ.wordCountOracleSql(cond, "CAST(count(*) AS BIGINT) AS cnt")
-    val rungs = DeclaredPcts.map { pct =>
-      val keep = UniverseSampled.keepSql("doc_id", pct)
-      s"""SELECT CAST($pct AS BIGINT) AS pct, d.sum_exact, d.sum_abs_diff,
-         |       (10000 * d.sum_abs_diff) // nullif(d.sum_exact, 0) AS data_error_bp,
-         |       nt.n_docs, nk.n_docs_kept,
-         |       ${Stats.errBoundSql("nt.n_docs", "nk.n_docs_kept", 0.95)} AS err_bound
-         |FROM (
-         |  SELECT CAST(sum(abs(coalesce(e.cnt, 0) - coalesce(s.est, 0))) AS BIGINT) AS sum_abs_diff,
-         |         CAST(sum(coalesce(e.cnt, 0)) AS BIGINT) AS sum_exact
-         |  FROM (${wcFrom("TRUE")}) e
-         |  FULL OUTER JOIN (
-         |    SELECT word, cnt * ${UniverseSampled.scaleFor(pct)} AS est
-         |    FROM (${wcFrom(keep)})) s USING (word)
-         |) d,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents) nt,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_docs_kept
-         | FROM documents WHERE $keep) nk""".stripMargin
-    }
-    rungs.mkString("", "\nUNION ALL\n", "\nORDER BY pct DESC")
-  }
+  /** DuckDB replay of [[wordcountLadderU]]. */
+  def wordcountLadderUOracleSql: String =
+    ladderUOracleSql(RQ.wordCountOracleSql(_, "CAST(count(*) AS BIGINT) AS cnt"),
+      "word", "documents", "doc_id", "n_docs")
 
   /** DuckDB replay of [[charcountLadderU]] — the `charcount` oracle's
-    * char-explode convention under the same rung arithmetic.
+    * char-explode convention.
     */
-  def charcountLadderUOracleSql: String = {
-    import graft.sampling.{Stats, UniverseSampled}
-    val ccFrom = (cond: String) =>
+  def charcountLadderUOracleSql: String =
+    ladderUOracleSql(cond =>
       s"""SELECT ch, CAST(count(*) AS BIGINT) AS cnt
          |FROM (SELECT unnest(string_split(text, '')) AS ch
          |      FROM documents WHERE ($cond))
-         |WHERE ch <> '' GROUP BY ch""".stripMargin
-    val rungs = DeclaredPcts.map { pct =>
-      val keep = UniverseSampled.keepSql("doc_id", pct)
-      s"""SELECT CAST($pct AS BIGINT) AS pct, d.sum_exact, d.sum_abs_diff,
-         |       (10000 * d.sum_abs_diff) // nullif(d.sum_exact, 0) AS data_error_bp,
-         |       nt.n_docs, nk.n_docs_kept,
-         |       ${Stats.errBoundSql("nt.n_docs", "nk.n_docs_kept", 0.95)} AS err_bound
-         |FROM (
-         |  SELECT CAST(sum(abs(coalesce(e.cnt, 0) - coalesce(s.est, 0))) AS BIGINT) AS sum_abs_diff,
-         |         CAST(sum(coalesce(e.cnt, 0)) AS BIGINT) AS sum_exact
-         |  FROM (${ccFrom("TRUE")}) e
-         |  FULL OUTER JOIN (
-         |    SELECT ch, cnt * ${UniverseSampled.scaleFor(pct)} AS est
-         |    FROM (${ccFrom(keep)})) s USING (ch)
-         |) d,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents) nt,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_docs_kept
-         | FROM documents WHERE $keep) nk""".stripMargin
-    }
-    rungs.mkString("", "\nUNION ALL\n", "\nORDER BY pct DESC")
-  }
+         |WHERE ch <> '' GROUP BY ch""".stripMargin,
+      "ch", "documents", "doc_id", "n_docs")
 
   /** DuckDB replay of [[logHostLadderU]] — the `log_host` oracle's CLF
     * convention (events synthesize to lines, `event_id % 97 = 0` lines
-    * are malformed and drop at parse) under the same rung arithmetic;
-    * n/N count RAW events like the engine side.
+    * are malformed and drop at parse); n/N count RAW events like the
+    * engine side.
     */
-  def logHostLadderUOracleSql: String = {
-    import graft.sampling.{Stats, UniverseSampled}
-    val hostFrom = (cond: String) =>
+  def logHostLadderUOracleSql: String =
+    ladderUOracleSql(cond =>
       s"""SELECT 'h' || CAST(user_id AS VARCHAR) || '.example.com' AS host,
          |       CAST(count(*) AS BIGINT) AS cnt
-         |FROM events WHERE event_id % 97 <> 0 AND ($cond) GROUP BY 1""".stripMargin
+         |FROM events WHERE event_id % 97 <> 0 AND ($cond) GROUP BY 1""".stripMargin,
+      "host", "events", "event_id", "n_lines")
+
+  /** The DuckDB replay of [[ladderU]] — same keeps, same integer
+    * comparator arithmetic, same T4 chain, one rung per UNION branch.
+    * `counts(cond)` is the family's per-key count (`keyCol`, `cnt`) over
+    * the rows of `table` passing `cond`; `unitCol` is the sampling unit
+    * and `nCol` names the unit totals, as in [[ladderU]].
+    */
+  private def ladderUOracleSql(
+      counts: String => String,
+      keyCol: String,
+      table: String,
+      unitCol: String,
+      nCol: String): String = {
+    import graft.sampling.{Stats, UniverseSampled}
+    val nKeptCol = s"${nCol}_kept"
     val rungs = DeclaredPcts.map { pct =>
-      val keep = UniverseSampled.keepSql("event_id", pct)
+      val keep = UniverseSampled.keepSql(unitCol, pct)
       s"""SELECT CAST($pct AS BIGINT) AS pct, d.sum_exact, d.sum_abs_diff,
          |       (10000 * d.sum_abs_diff) // nullif(d.sum_exact, 0) AS data_error_bp,
-         |       nt.n_lines, nk.n_lines_kept,
-         |       ${Stats.errBoundSql("nt.n_lines", "nk.n_lines_kept", 0.95)} AS err_bound
+         |       nt.$nCol, nk.$nKeptCol,
+         |       ${Stats.errBoundSql(s"nt.$nCol", s"nk.$nKeptCol", 0.95)} AS err_bound
          |FROM (
          |  SELECT CAST(sum(abs(coalesce(e.cnt, 0) - coalesce(s.est, 0))) AS BIGINT) AS sum_abs_diff,
          |         CAST(sum(coalesce(e.cnt, 0)) AS BIGINT) AS sum_exact
-         |  FROM (${hostFrom("TRUE")}) e
+         |  FROM (${counts("TRUE")}) e
          |  FULL OUTER JOIN (
-         |    SELECT host, cnt * ${UniverseSampled.scaleFor(pct)} AS est
-         |    FROM (${hostFrom(keep)})) s USING (host)
+         |    SELECT $keyCol, cnt * ${UniverseSampled.scaleFor(pct)} AS est
+         |    FROM (${counts(keep)})) s USING ($keyCol)
          |) d,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_lines FROM events) nt,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_lines_kept
-         | FROM events WHERE $keep) nk""".stripMargin
+         |(SELECT CAST(count(*) AS BIGINT) AS $nCol FROM $table) nt,
+         |(SELECT CAST(count(*) AS BIGINT) AS $nKeptCol
+         | FROM $table WHERE $keep) nk""".stripMargin
     }
     rungs.mkString("", "\nUNION ALL\n", "\nORDER BY pct DESC")
   }

@@ -1,20 +1,19 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each declared query's result ([[SparkEntry.all]])
+  * → parquet, plus oracle_sql.json, for the DuckDB compare
+  * (`tools/check_oracle.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName...] — trailing names restrict the
     // dump to those queries (local iteration); the driver passes only two.
     val (Array(sfDir, outDir), only) = args.splitAt(2)
+    val selected = if (only.isEmpty) SparkEntry.all else only.toSeq.map(SparkEntry.query)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only.contains).toMap
     // A failing query must leave a TRACE, not a hole: in round 11 two broken
     // families simply vanished from the driver's CORRECTNESS record because
     // their parquet dirs were never written, and the round read as fully
@@ -22,8 +21,8 @@ object Verify {
     // verify_errors.json beside the outputs, echoed in one summary line,
     // and the process exits non-zero so the round record can't look clean.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    selected.foreach { case Query(name, build, _) =>
+      try build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)

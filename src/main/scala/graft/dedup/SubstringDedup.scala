@@ -168,10 +168,11 @@ object SubstringDedup {
         .select(col("doc_id"), col("pos"), col("kg")))
 
   /** The shared CONFIRM core: candidates (doc_id, pos, kg) collapse to one
-    * sorted per-doc struct array, one corpus join (aggregate build side)
-    * runs the compiled verbatim compare, and the survivors feed the island
-    * merge. Used by the batch dup-set path and the confirmed incremental
-    * path.
+    * UNORDERED per-doc struct array, one corpus join (aggregate build side)
+    * runs the compiled verbatim compare (order-independent: each candidate
+    * is decided alone), and the survivors feed the island merge, where
+    * [[spansFromCut]] sorts the cut positions. Used by the batch dup-set
+    * path and the confirmed incremental path.
     */
   private def confirmedSpans(corpus: DataFrame, cands: DataFrame): DataFrame = {
     // no sort_array (r18): the confirm kernel decides each candidate

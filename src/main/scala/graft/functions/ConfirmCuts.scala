@@ -34,9 +34,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * pass, and `substring` re-seeks UTF-8 from the string head (O(pos)
   * per candidate — quadratic per doc) where the single decode is O(n).
   *
-  * Output: the confirmed subset of `positions`, order preserved (callers
-  * pass them ascending). Positions out of range and grams of the wrong
-  * length confirm nothing.
+  * Output: the confirmed subset of `positions`, in input order. Each
+  * position is decided alone, so the result does not depend on that
+  * order; callers pass unordered candidates and the island merge
+  * ([[graft.dedup.SubstringDedup]]'s `spansFromCut`) does the sort.
+  * Positions out of range and grams of the wrong length confirm nothing.
   */
 case class ConfirmCuts(first: Expression, second: Expression, third: Expression)
   extends TernaryExpression {

@@ -40,12 +40,36 @@ case class RegexGroups(first: Expression, second: Expression, third: Expression)
     (first.dataType, second.dataType, third.dataType) match {
       case (StringType, StringType, StringType)
           if second.foldable && third.foldable =>
-        TypeCheckResult.TypeCheckSuccess
+        argumentError.fold[TypeCheckResult](TypeCheckResult.TypeCheckSuccess)(
+          TypeCheckResult.TypeCheckFailure(_))
       case _ =>
         TypeCheckResult.TypeCheckFailure(
           s"$prettyName requires (string, foldable string regex, foldable " +
             s"string group list), got " +
             Seq(first, second, third).map(_.dataType.sql).mkString(", "))
+    }
+
+  /** What is wrong with the literal regex or group list, checked once at
+    * analysis so a bad argument never fails per row mid-job: the regex
+    * must compile and every list entry must be an integer in
+    * `0..groupCount`. A null literal passes — it yields null rows, like
+    * any null argument.
+    */
+  private def argumentError: Option[String] =
+    (second.eval(null), third.eval(null)) match {
+      case (null, _) | (_, null) => None
+      case (regex, list) =>
+        scala.util.Try(java.util.regex.Pattern.compile(regex.toString)).toEither match {
+          case Left(e) => Some(s"$prettyName: invalid regex '$regex': ${e.getMessage}")
+          case Right(p) =>
+            val groupCount = p.matcher("").groupCount()
+            list.toString.split(",").map(_.trim).collectFirst {
+              case g if g.toIntOption.isEmpty =>
+                s"$prettyName: group list entry '$g' is not an integer"
+              case g if g.toInt < 0 || g.toInt > groupCount =>
+                s"$prettyName: group index $g is outside 0..$groupCount of regex '$regex'"
+            }
+        }
     }
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)

@@ -9,13 +9,15 @@ package graft.tools
 object ExplainQueries {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
+    val queries =
+      if (args.length > 1) args.drop(1).toSeq.map(graft.SparkEntry.query)
+      else graft.SparkEntry.all.sortBy(_.name)
     val spark = graft.GraftSession.builder("local[4]", "4")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      println(s"===== $n =====")
-      graft.SparkEntry.queries(n)(spark, dir).explain("formatted")
+    queries.foreach { q =>
+      println(s"===== ${q.name} =====")
+      q.build(spark, dir).explain("formatted")
     }
     spark.stop()
   }

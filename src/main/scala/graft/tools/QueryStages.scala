@@ -58,8 +58,7 @@ object QueryStages {
     }
 
     args.foreach { name =>
-      val build = graft.SparkEntry.queries.getOrElse(
-        name, sys.error(s"unknown query: $name"))
+      val build = graft.SparkEntry.query(name).build
       // warmup (codegen, first-touch scan, saved artifacts)
       build(spark, sfDir).write.format("noop").mode("overwrite").save()
       spark.catalog.clearCache()

@@ -74,9 +74,9 @@ object StageCpu {
         // re-spelled copy could silently measure a different plan than
         // the sweep it attributes
         ScaleProbe.splitIncrementalAt(docs0, k)
-      case q if graft.SparkEntry.queries.contains(q) => _ =>
-        graft.SparkEntry.queries(q)(spark, sfDir)
-      case other => sys.error(s"family not wired for stage diagnosis: $other")
+      case q =>
+        val query = graft.SparkEntry.query(q)
+        _ => query.build(spark, sfDir)
     }
 
     case class Row(

@@ -22,8 +22,7 @@ object TimeQuery {
     }
     def cpuNow(): Long = osBean.map(_.getProcessCpuTime).getOrElse(-1L)
     args.foreach { name =>
-      val build = graft.SparkEntry.queries.getOrElse(
-        name, sys.error(s"unknown query: $name"))
+      val build = graft.SparkEntry.query(name).build
       def once(): (Double, Double) = {
         val c0 = cpuNow(); val t0 = System.nanoTime()
         build(spark, sfDir).write.format("noop").mode("overwrite").save()

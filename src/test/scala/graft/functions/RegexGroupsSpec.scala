@@ -8,7 +8,8 @@ import graft.SparkSpec
   * independent `regexp_extract` calls it replaced (per group, on matching
   * rows), yield an EMPTY array on non-matching rows (the caller's
   * size-based malformed filter), return "" for null groups, and propagate
-  * a null input.
+  * a null input. A bad regex or group list fails analysis, naming the
+  * argument, before any row is read.
   */
 class RegexGroupsSpec extends SparkSpec {
   import spark.implicits._
@@ -49,5 +50,29 @@ class RegexGroupsSpec extends SparkSpec {
       RegexGroups.regexGroups(col("s"), "key=([0-9]+)", Seq(1)).as("k"),
       regexp_extract(col("s"), "key=([0-9]+)", 1).as("e")).head()
     assert(out.getSeq[String](0) === Seq(out.getString(1)))
+  }
+
+  /** The analysis error of `regex_groups(s, regex, groups)`, called by
+    * name so a raw group-list string reaches the analyzer unparsed. */
+  private def analysisError(regex: String, groups: String): String = {
+    val df = Seq("ab").toDF("s")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(call_function("regex_groups", col("s"), lit(regex), lit(groups))).schema
+    }.getMessage
+  }
+
+  test("a group index past groupCount fails at analysis, naming the index") {
+    val msg = analysisError("a(b)", "1,2")
+    assert(msg.contains("group index 2 is outside 0..1"), msg)
+  }
+
+  test("a non-integer group list entry fails at analysis, naming the entry") {
+    val msg = analysisError("a(b)", "1,x")
+    assert(msg.contains("group list entry 'x' is not an integer"), msg)
+  }
+
+  test("an invalid regex fails at analysis, naming the regex") {
+    val msg = analysisError("a(b", "1")
+    assert(msg.contains("invalid regex 'a(b'"), msg)
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.catalyst.plans.logical.Window
 
 /** Tripwire for ACCIDENTAL single-partition windows (VERDICT r13 §perf:
@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
   * WindowExec warnings, which would mask a future accidental global
   * window — and the bench now runs at ERROR level, silencing even that).
   * This spec makes the masking impossible at the PLAN level: it walks the
-  * optimized plan of EVERY declared query (the SchemaContractSpec sweep
-  * pattern) and asserts the exact set of queries carrying a partition-less
+  * optimized plan of EVERY declared query (in the shared [[CatalogSweep]]
+  * pass) and asserts the exact set of queries carrying a partition-less
   * Window equals the documented whitelist — each member a bounded
   * bucket-offset frame (two-level prefix sum over ≤ shuffle-partition-count
   * offset rows; see TokenBudget/RangeRank/GlobalShuffle scaladoc), never a
@@ -56,17 +56,9 @@ class GlobalWindowTripwireSpec extends SparkSpec {
 
   test("the global-window query set is exactly the documented whitelist") {
     assumeTestdata(sf001)
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan =
-          try fn(spark, sf001).queryExecution.optimizedPlan
-          catch {
-            case e: Throwable =>
-              fail(s"query $name failed to analyze: ${e.getMessage}")
-          }
-        val globals = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
-        if (globals.nonEmpty) Some(name) else None
-    }.toSet
+    val offenders = CatalogSweep.rows.filter { r =>
+      r.globalWindow.fold(e => fail(s"query ${r.name} failed to analyze: $e"), identity)
+    }.map(_.name).toSet
     val undocumented = offenders -- DocumentedGlobalWindows
     val stale = DocumentedGlobalWindows -- offenders
     assert(undocumented.isEmpty,

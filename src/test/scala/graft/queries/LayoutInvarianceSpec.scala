@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{NoOracle, Query, SparkEntry, SparkSpec}
 
 /** Catalog-wide LAYOUT-invariance tripwire (VERDICT r16 item 6):
   * repartition invariance was spec-pinned per-operator in a handful of
@@ -14,6 +14,11 @@ import graft.{SparkEntry, SparkSpec}
   * `spark_partition_id`, a per-partition RNG, a first-wins merge that
   * isn't actually deterministic) fails here BY NAME.
   *
+  * The queries whose answer legitimately depends on the layout are the
+  * registry's `NoOracle(reason, layoutSensitive = true)` entries; every
+  * other query must be bit-stable. The runs come from the shared
+  * [[CatalogSweep]] pass.
+  *
   * Saved artifacts rebuild per layout automatically (their paths key on
   * the fixture's file metadata), so artifact DERIVATIONS are covered by
   * the same sweep: a layout-sensitive artifact build surfaces as a
@@ -21,95 +26,22 @@ import graft.{SparkEntry, SparkSpec}
   */
 class LayoutInvarianceSpec extends SparkSpec {
 
-  /** Queries whose results legitimately depend on the data layout, each
-    * with the documented reason. Everything else must be bit-stable.
-    */
-  private val LayoutSensitiveByDesign: Map[String, String] = Map(
-    // the seeded-RNG Bernoulli twins: rand(seed) draws are a documented
-    // function of (seed, partition index) — the reference's unseeded
-    // sampler made every RUN a different sample; the engine pins the seed
-    // so a fixed layout replays, but a different layout IS a different
-    // draw stream by contract (the deterministic `_u10` universe twins
-    // exist precisely to be layout-free, and are asserted invariant here)
-    "wordcount_sampled_r10" -> "rand(seed) draws are partition-indexed",
-    "wireless_sampled_r10" -> "rand(seed) draws are partition-indexed",
-    "text_quality_sampled_r10" -> "rand(seed) draws are partition-indexed",
-    "text_tokens_sampled_r10" -> "rand(seed) draws are partition-indexed",
-    "tpch_q1_sampled_r10" -> "rand(seed) draws are partition-indexed",
-    "tpch_q6_sampled_r10" -> "rand(seed) draws are partition-indexed",
-    // same rand(seed) Bernoulli core, per-stratum rate (the `_u` twin is
-    // the layout-free deterministic form, asserted invariant above)
-    "events_stratified_sum" -> "rand(seed) draws are partition-indexed",
-    // the seeded k-means FIT consumes vectors in partition order (batch
-    // centroid updates over whatever rows land where), so different file
-    // splits legitimately converge to different (equally valid) centroid
-    // sets — the deterministic end-to-end twin is simsearch_ivf_det,
-    // asserted invariant above; these two are rows-only gated for the
-    // same documented reason (CORRECTNESS no_oracle: seeded fit)
-    "simsearch_ivf_build" -> "seeded k-means fit consumes partition order",
-    "simsearch_ivf_saved" -> "seeded k-means fit consumes partition order")
-
-  /** Canonical multiset fingerprint of a query result: every row
-    * rendered field-by-field (floats rounded to 6 dp — the oracle gate's
-    * own tolerance — so aggregation-order ulps don't read as layout
-    * sensitivity), sorted, digested.
-    */
-  private def fingerprint(df: org.apache.spark.sql.DataFrame): String = {
-    val rows = df.collect().map { r =>
-      (0 until r.length).map { i =>
-        r.get(i) match {
-          case null => "<null>"
-          case d: Double => f"$d%.6f"
-          case f: Float => f"${f.toDouble}%.6f"
-          case d: java.math.BigDecimal => d.setScale(6, java.math.RoundingMode.HALF_UP).toPlainString
-          case s: Seq[_] => s.mkString("[", ",", "]")
-          case b: Array[Byte] => java.util.Base64.getEncoder.encodeToString(b)
-          case v => v.toString
-        }
-      }.mkString("")
-    }.sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** One-time repartition(7) rewrite of the sf0.001 fixture under the JVM
-    * tmpdir, keyed on the source fixture's content digest so a testdata
-    * regeneration rebuilds the copy instead of comparing against a stale
-    * layout.
-    */
-  private def altLayoutDir: String = {
-    val tables = Seq("documents", "events", "lineitem", "orders", "customer",
-      "supplier", "part", "nation", "region", "embeddings")
-    val digest = Tables.contentDigest(tables.map(t => Tables.path(sf001, t)): _*)
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_layout7_$digest"
-    val marker = new java.io.File(s"$dir/_ALL_TABLES_OK")
-    if (!marker.exists()) {
-      tables.foreach { t =>
-        spark.read.parquet(Tables.path(sf001, t))
-          .repartition(7)
-          .write.mode("overwrite").parquet(s"$dir/$t.parquet")
-      }
-      marker.createNewFile()
-    }
-    dir
-  }
-
   test("every declared query is layout-invariant (default vs repartition(7) fixture)") {
     assumeTestdata(sf001)
-    val alt = altLayoutDir
-    val diffs = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val a = try fingerprint(fn(spark, sf001)) catch {
-        case e: Throwable => fail(s"query $name failed on the pristine layout: ${e.getMessage}")
-      }
-      val b = try fingerprint(fn(spark, alt)) catch {
-        case e: Throwable => fail(s"query $name failed on the repartition(7) layout: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
-      if (a != b) Some(name) else None
+    val rows = CatalogSweep.rows
+    rows.foreach { r =>
+      r.pristine.left.foreach(e => fail(s"query ${r.name} failed on the pristine layout: $e"))
+      r.repartitioned.left.foreach(e =>
+        fail(s"query ${r.name} failed on the repartition(7) layout: $e"))
+    }
+    val diffs = rows.filter(r => r.pristine != r.repartitioned).map(_.name).toSet
+    // the documented exceptions: queries without an oracle declared
+    // layout-sensitive in the registry, each with its reason
+    val sensitiveByDesign = SparkEntry.all.collect {
+      case Query(name, _, NoOracle(_, true)) => name
     }.toSet
-    val undocumented = diffs -- LayoutSensitiveByDesign.keySet
-    val stale = LayoutSensitiveByDesign.keySet -- diffs
+    val undocumented = diffs -- sensitiveByDesign
+    val stale = sensitiveByDesign -- diffs
     assert(undocumented.isEmpty,
       s"LAYOUT-SENSITIVE queries outside the documented set: $undocumented")
     assert(stale.isEmpty,

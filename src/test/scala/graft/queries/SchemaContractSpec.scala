@@ -64,18 +64,14 @@ class SchemaContractSpec extends SparkSpec {
   }
 
   test("every declared query analyzes against the live testdata schema") {
-    // Forcing .schema runs full analysis (resolution + type checking) without
-    // executing the plan, so a DATATYPE_MISMATCH or missing-column error from
-    // a regenerated table surfaces for ALL 95+ queries in seconds. Execution
-    // correctness is the driver's DuckDB gate; this is the cheap early tripwire.
+    // The shared CatalogSweep forces .schema — full analysis (resolution +
+    // type checking) — on every query, so a DATATYPE_MISMATCH or
+    // missing-column error from a regenerated table surfaces for ALL of
+    // them at once. Execution correctness is the DuckDB oracle gate;
+    // this is the early tripwire.
     assumeTestdata(sf001)
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try { fn(spark, sf001).schema; None }
-        catch { case e: Throwable =>
-          Some(s"$name: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(200)}")
-        }
-    }
+    val failures = CatalogSweep.rows.flatMap(r =>
+      r.analysis.left.toOption.map(e => s"${r.name}: ${e.take(200)}"))
     assert(failures.isEmpty, s"\n${failures.mkString("\n")}")
   }
 
