@@ -1,5 +1,7 @@
 package graft
 
+import graft.tools.Measure
+
 /** Benchmark main — one JSON line on stdout per the driver contract.
   *
   * Harness discipline (VERDICT r1 §wrong 4-5): one warmup pass per query
@@ -9,9 +11,10 @@ package graft
   * de-confounding); failures are never swallowed — a crashing query is
   * reported in an `errors` field and the process exits non-zero.
   *
-  * Timed action: a noop-sink write, which executes the FULL plan including
-  * each query's final orderBy (a `count()` would let Catalyst drop the
-  * sort, systematically under-measuring sink cost — VERDICT r3 §wrong 7).
+  * Timed action: [[graft.tools.Measure.trial]], a noop-sink write, which
+  * executes the FULL plan including each query's final orderBy (a
+  * `count()` would let Catalyst drop the sort, systematically
+  * under-measuring sink cost — VERDICT r3 §wrong 7).
   */
 object Bench {
 
@@ -53,57 +56,18 @@ object Bench {
     val names = SparkEntry.all.map(_.name).sorted
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
 
-    // Process-CPU time alongside wall time (VERDICT r7 §wrong 2): on a
-    // contended host, wall time inflates while the query's own CPU time
-    // stays flat, so the pair separates "plan regressed" from "host was
-    // busy". local-mode executors are threads of this JVM, so process CPU
-    // covers the whole query. com.sun.management is HotSpot-specific and
-    // getProcessCpuTime may return -1 where unsupported (ADVICE r8) — the
-    // cpu fields are simply omitted there rather than crashing the bench.
-    val osBean: Option[com.sun.management.OperatingSystemMXBean] =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case b: com.sun.management.OperatingSystemMXBean => Some(b)
-        case _ => None
-      }
-    def cpuNow(): Long = osBean.map(_.getProcessCpuTime).getOrElse(-1L)
-    // Cumulative stop-the-world GC milliseconds across all collectors:
-    // recorded per trial so catalog-size CPU inflation (r12->r13 read
-    // uniformly +31% in a 48%-larger single-JVM run) is an artifact column
-    // — cpu_minus_gc — instead of a per-round forensic exercise (VERDICT
-    // r13 item 4). The scale probe already records this; the bench now
-    // matches.
-    def gcNow(): Long =
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .stream.mapToLong(b => math.max(b.getCollectionTime, 0L)).sum
-
     // Warmup failures are NOT errors (transient first-touch issues would
     // otherwise fail the whole bench even when all timed trials pass);
     // only timed-trial failures count, and the per-query trial count is
     // reported so a median over <3 samples is visible in the JSON.
-    def run(name: String, recordError: Boolean): Option[(Double, Option[Double], Double)] =
-      try {
-        val c0 = cpuNow()
-        val g0 = gcNow()
-        val t0 = System.nanoTime()
-        SparkEntry.query(name).build(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val c1 = cpuNow()
-        val g1 = gcNow()
-        Some((
-          (System.nanoTime() - t0) / 1e9,
-          if (c0 < 0 || c1 < 0) None else Some((c1 - c0) / 1e9),
-          (g1 - g0) / 1e3))
-      } catch {
+    def run(name: String, recordError: Boolean): Option[Measure.Trial] =
+      try Some(Measure.trial(spark)(SparkEntry.query(name).build(spark, sfDir)))
+      catch {
         case e: Throwable =>
           if (recordError)
             errors.getOrElseUpdate(
               name, Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
           None
-      } finally {
-        // release any persist() the query pipeline took (dedup signatures,
-        // posting lists, CC labels): each trial pays the full honest cost
-        // and a long-lived session doesn't accrete executor memory
-        spark.catalog.clearCache()
       }
 
     names.foreach(run(_, recordError = false)) // warmup
@@ -123,11 +87,10 @@ object Bench {
     names.foreach { n =>
       trialTimes(n) = Seq.empty; trialCpu(n) = Seq.empty; trialGc(n) = Seq.empty
     }
-    for (_ <- 1 to 3; name <- names) run(name, recordError = true).foreach {
-      case (wall, cpu, gc) =>
-        trialTimes(name) = trialTimes(name) :+ wall
-        cpu.foreach(c => trialCpu(name) = trialCpu(name) :+ c)
-        trialGc(name) = trialGc(name) :+ gc
+    for (_ <- 1 to 3; name <- names) run(name, recordError = true).foreach { t =>
+      trialTimes(name) = trialTimes(name) :+ t.wallS
+      t.cpuS.foreach(c => trialCpu(name) = trialCpu(name) :+ c)
+      trialGc(name) = trialGc(name) :+ t.gcS
     }
     val trialCounts = scala.collection.mutable.LinkedHashMap[String, Int]()
     names.foreach(n => trialCounts(n) = trialTimes.getOrElse(n, Seq.empty).size)

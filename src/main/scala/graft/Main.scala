@@ -112,12 +112,14 @@ object Main {
     rpt
   }
 
+  private val Usage =
+    "Usage: graft.Main <randwordcount|randcharcount|randapachelog|randwireless> " +
+      "<in> <out> [task] [ratio|confLevel,errorRate,bitsOfInputLength]\n" +
+      "   or: graft.Main compare <commonPath> <run0> <run1> […runN]"
+
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
-      System.err.println(
-        "Usage: graft.Main <randwordcount|randcharcount|randapachelog|randwireless> " +
-          "<in> <out> [task] [ratio|confLevel,errorRate,bitsOfInputLength]\n" +
-          "   or: graft.Main compare <commonPath> <run0> <run1> […runN]")
+      System.err.println(Usage)
       sys.exit(2)
     }
     val job = args(0)
@@ -139,7 +141,15 @@ object Main {
     val (task, samplingArg) =
       if (job == "randapachelog") (args.lift(3), args.lift(4))
       else (None, args.lift(3))
-    val cfg = samplingArg.map(SamplingConfig.parse(_)).getOrElse(SamplingConfig())
+    val cfg = samplingArg.map { a =>
+      try SamplingConfig.parse(a)
+      catch {
+        case e: IllegalArgumentException =>
+          System.err.println(e.getMessage)
+          System.err.println(Usage)
+          sys.exit(2)
+      }
+    }.getOrElse(SamplingConfig())
     val spark = buildSession()
     val rpt = runJob(spark, job, args(1), args(2), task, cfg)
     println(rpt.toString)

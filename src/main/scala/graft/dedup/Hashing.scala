@@ -21,6 +21,15 @@ object Hashing {
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
+  /** Driver-side twin of the Column [[hash60]], bit-identical to it: the
+    * first 15 hex digits of md5 are the top 60 bits of the digest's first
+    * 8 bytes.
+    */
+  def hash60(s: String): Long =
+    java.nio.ByteBuffer.wrap(
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))).getLong >>> 4
+
   /** SQL text of [[hash60]] for DuckDB oracle generation. */
   def hash60Sql(expr: String): String =
     s"CAST('0x' || substr(md5($expr), 1, 15) AS BIGINT)"

@@ -42,16 +42,24 @@ object SamplingConfig {
 
   /** Parse the reference CLI argument format: `ratio` or
     * `confidence,errorBound,inputBits` (RandomSamplingUtil.java:129-143).
+    * Any other field count, or a non-numeric field, throws an
+    * [[IllegalArgumentException]] naming both accepted forms.
     */
   def parse(arg: String, seed: Long = DefaultSeed): SamplingConfig = {
-    val parts = arg.split(",")
-    if (parts.length > 1)
-      SamplingConfig(
-        ratio = -1,
-        confidence = parts(0).toDouble,
-        errorBound = parts(1).toDouble,
-        inputBits = parts(2).toInt,
-        seed = seed)
-    else SamplingConfig(ratio = parts(0).toDouble, seed = seed)
+    def bad = new IllegalArgumentException(
+      s"malformed sampling argument '$arg': expected ratio or confidence,errorBound,inputBits")
+    def num[T](field: String, read: String => T): T =
+      try read(field.trim) catch { case _: NumberFormatException => throw bad }
+    arg.split(",", -1) match {
+      case Array(r) => SamplingConfig(ratio = num(r, _.toDouble), seed = seed)
+      case Array(c, e, b) =>
+        SamplingConfig(
+          ratio = -1,
+          confidence = num(c, _.toDouble),
+          errorBound = num(e, _.toDouble),
+          inputBits = num(b, _.toInt),
+          seed = seed)
+      case _ => throw bad
+    }
   }
 }

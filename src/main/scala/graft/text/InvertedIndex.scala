@@ -69,12 +69,7 @@ object InvertedIndex {
     * lockstep with [[Hashing.hash60]] `% NumBuckets` (spec-pinned over the
     * whole live vocabulary).
     */
-  def bucketOf(term: String): Int = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(term.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    (java.lang.Long.parseLong(hex.take(15), 16) % NumBuckets).toInt
-  }
+  def bucketOf(term: String): Int = (Hashing.hash60(term) % NumBuckets).toInt
 
   /** Path of the published index for the corpus at `dir`, building it on
     * first use: bucket-partitioned, `(term, doc_id)`-sorted parquet keyed

@@ -86,4 +86,12 @@ class StatsSpec extends AnyFunSuite {
     val p = SamplingConfig.parse("0.95,0.01,6")
     assert(math.abs(p.resolvedRatio - 0.009512640599680667) < Eps)
   }
+
+  test("SamplingConfig.parse rejects a malformed CLI argument, naming both accepted forms") {
+    // 2 fields used to index past the array; 4 silently dropped the last
+    for (arg <- Seq("0.95,0.02", "0.95,0.02,6,9", "half", "0.95,x,6", "0.95,0.02,6.5", "")) {
+      val e = intercept[IllegalArgumentException](SamplingConfig.parse(arg))
+      assert(e.getMessage.contains("ratio or confidence,errorBound,inputBits"), arg)
+    }
+  }
 }

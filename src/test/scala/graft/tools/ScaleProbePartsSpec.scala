@@ -77,4 +77,16 @@ class ScaleProbePartsSpec extends AnyFunSuite {
     assert(tri.get("spark.sql.adaptive.autoBroadcastJoinThreshold") === Some("-1"))
     assert(tri.get("spark.sql.join.preferSortMergeJoin") === Some("false"))
   }
+
+  test("every tinyRowParts, familyConf and AttributionNotes key names a family in the probe's table") {
+    // the hand-copied sets above pin each map's intent; this ties all
+    // three to the families the sweep actually runs. Notes on an
+    // extended-factor re-probe are keyed by its merge-row name
+    // (<family>__x<lo>_<hi>), so the suffix is stripped first.
+    val families = ScaleProbe.Families.keySet
+    assert(ScaleProbe.tinyRowParts.keySet -- families === Set.empty)
+    assert(ScaleProbe.familyConf.keySet -- families === Set.empty)
+    val noteFamilies = ScaleProbe.AttributionNotes.keySet.map(_.replaceFirst("__x\\d+_\\d+$", ""))
+    assert(noteFamilies -- families === Set.empty)
+  }
 }
