@@ -496,14 +496,6 @@ object SparkEntry {
         .orderBy("doc_id")
     },
       Sql(graft.dedup.DataSplit.assignIncrementalOracleSql)),
-    // the O(log d) large-star/small-star CC strategy over the same pairs —
-    // bit-identical decisions, gated by the same reachability oracle
-    Query("dedup_clusters_bigstar", (s, dir) => {
-      val corpus = DedupCorpus.augment(Tables.documents(s, dir))
-      DedupClusters.decisionsBigStar(corpus, MinHashLSH.nearDupPairs(MinHashLSH.signatures(corpus)))
-        .orderBy("doc_id")
-    },
-      Sql(DedupClusters.decisionsOracleSql)),
     // the full pipeline a training-data job ships: signatures → pairs →
     // components → surviving corpus
     Query("dedup_cleaned", (s, dir) =>

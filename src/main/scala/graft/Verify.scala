@@ -1,8 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Correctness dump: each declared query's result ([[SparkEntry.all]])
-  * → parquet, plus oracle_sql.json, for the DuckDB compare
-  * (`tools/check_oracle.py`). */
+/** Correctness dump: each selected query's result ([[SparkEntry.all]]
+  * by default) → parquet, plus its oracle SQL in oracle_sql.json, for the
+  * DuckDB compare (`tools/check_oracle.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName...] — trailing names restrict the
@@ -43,8 +43,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // the selected queries' oracles only: tools/check_oracle.py fails on
+    // any oracle key without an output dir
+    val json = selected
+      .collect { case Query(name, _, Sql(sql)) => s"${q(name)}: ${q(sql)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

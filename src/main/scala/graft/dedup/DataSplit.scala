@@ -205,9 +205,8 @@ object DataSplit {
     * recursive-reachability clusters + the same salted-hash verdict.
     */
   def assignOracleSql: String =
-    DedupClusters.reachCtes +
-      s""",
-         |dec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node)
+    DedupClusters.clusterCtes +
+      s"""
          |SELECT doc_id, rep AS cluster_rep, ${splitSql("rep")} AS split
          |FROM dec ORDER BY doc_id""".stripMargin
 
@@ -228,9 +227,8 @@ object DataSplit {
       s""",
          |sdec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node)
          |SELECT doc_id, ${splitSql("rep")} AS split FROM sdec""".stripMargin
-    DedupClusters.reachCtes +
+    DedupClusters.clusterCtes +
       s""",
-         |dec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node),
          |saved AS (
          |$savedQuery
          |),
@@ -251,9 +249,8 @@ object DataSplit {
 
   /** DuckDB oracle for [[summary]]. */
   def summaryOracleSql: String =
-    DedupClusters.reachCtes +
+    DedupClusters.clusterCtes +
       s""",
-         |dec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node),
          |a AS (SELECT dec.doc_id, dec.rep, ${splitSql("rep")} AS split,
          |             CAST(length(c.text) AS BIGINT) AS len
          |      FROM dec JOIN corpus c ON c.doc_id = dec.doc_id)

@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   * (labels start as doc_id; each round every node takes the min label in
   * its closed neighborhood; stop when no label changes). Deterministic,
   * converges in O(component diameter) rounds — near-dup components are
-  * shallow (dups of dups), so a handful of joins. Each round is one
-  * shuffle on node id; at 100 TB scale the standard upgrade is the
-  * large-star/small-star CC algorithm (Kiveris et al., "Connected
-  * Components in MapReduce and Beyond", SoCC 2014), same join shape with
-  * alternation — the per-round plan here is exactly that building block.
+  * shallow (dups of dups), so a handful of rounds, each one join and one
+  * aggregate on node id. A component deeper than [[MaxIterations]] throws
+  * rather than returning labels that disagree with the exact reachability
+  * oracle. Star contraction (Kiveris et al., SoCC 2014) saves rounds only
+  * on deep components: on the catalog's near-dup graphs both converge in
+  * 2 rounds, and its four shuffles per alternation measured no faster on
+  * any consumer than this loop's one join and one aggregate per round.
   */
 object DedupClusters {
 
@@ -100,126 +102,11 @@ object DedupClusters {
     labels.select(col("node").as("doc_id"), col("label").as("rep"))
   }
 
-  /** Iteration cap for [[componentsBigStar]]: star contraction halves a
-    * potential function every alternation (Kiveris et al., SoCC 2014,
-    * Thm 5.1 — O(log² n) worst case, O(log n) observed), so 40 rounds
-    * covers any corpus that fits in storage; hitting the cap means a bug,
-    * not a deep graph, and throws like the min-label loop does.
-    */
-  val MaxStarRounds = 40
-
-  /** Alternative CC strategy: LARGE-STAR / SMALL-STAR alternation
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) — the scaladoc's own named upgrade path for [[components]].
-    * Min-label propagation needs O(component diameter) rounds, which is
-    * fine for shallow near-dup clusters but degrades on chain-shaped
-    * components (A~B~C~… with no short-cuts); star contraction converges
-    * in O(log d) alternations because each round re-points nodes at their
-    * neighborhood minimum, halving every path.
-    *
-    * Per alternation: two half-rounds, each a conf-partitioned
-    * `groupBy(u).agg(min(v))` (map-side combining — a mega-star center
-    * costs one long per map partition) followed by an id-keyed join that
-    * fans out one row per edge. No neighborhood is ever materialized as a
-    * list, so a 10⁸-member cluster is just 10⁸ rows spread across the
-    * shuffle, and AQE's skew split handles the one hot join partition a
-    * giant star center creates. Edge multiset is `distinct`-ed per
-    * half-round (star contraction collapses parallel edges fast, so the
-    * working set SHRINKS monotonically — the property that makes this the
-    * 100 TB choice).
-    *
-    * Convergence: Σ(u+v) over the canonical edge list as decimal(38,0).
-    * Both stars only ever re-point an edge end at a smaller label, so the
-    * sum is non-increasing per edge and strictly drops when anything
-    * changes (dedup removals only drop it further) — an unchanged sum
-    * across a full alternation ⟺ the edge set is a fixed point, i.e. a
-    * forest of stars centered at each component's minimum id. One cheap
-    * action per alternation, same pattern as [[components]]'s label sum.
-    *
-    * Returns (labels, alternations): labels is (doc_id, rep) like
-    * [[components]]; bit-identical output (both strategies are
-    * deterministic and converge to min-id representatives), so the
-    * `dedup_clusters` DuckDB oracle gates this path too
-    * (`dedup_clusters_bigstar`).
-    */
-  def componentsBigStar(corpus: DataFrame, pairs: DataFrame): (DataFrame, Int) = {
-    val spark = corpus.sparkSession
-    val nParts = edgePartitions(spark)
-    val nodes = corpus.select(col("doc_id").as("node"))
-    // canonical undirected edges: (u = max, v = min), self-loops dropped
-    var edges = pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
-              least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .repartition(nParts, col("u"))
-      .localCheckpoint(false)
-
-    // m(u) = min of the closed neighborhood of u over `directed`
-    def neighborhoodMin(directed: DataFrame): DataFrame =
-      directed.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-
-    // large-star: key BOTH directions; emit (v, m) for neighbors v > u.
-    // v > u ≥ m keeps the output canonical with no self-loops.
-    def largeStar(e: DataFrame): DataFrame = {
-      val directed = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      directed.join(neighborhoodMin(directed), Seq("u"))
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-    }
-
-    // small-star: key the LARGER endpoint (canonical order already does
-    // this); emit (v, m) for neighbors v ≠ m, plus (u, m).
-    def smallStar(e: DataFrame): DataFrame = {
-      val mm = neighborhoodMin(e)
-      e.join(mm, Seq("u"))
-        .where(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionAll(mm.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-
-    def edgeSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum((col("u") + col("v")).cast("decimal(38,0)"))).head().getDecimal(0)
-
-    var prevSum = edgeSum(edges) // null ⇔ no edges at all
-    var converged = prevSum == null
-    var iter = 0
-    while (!converged && iter < MaxStarRounds) {
-      val next = smallStar(largeStar(edges).localCheckpoint(false)).localCheckpoint(false)
-      val newSum = edgeSum(next)
-      edges = next
-      converged = newSum == null || newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      iter += 1
-    }
-    System.err.println(s"DedupClusters.componentsBigStar: $iter alternations, converged=$converged")
-    if (!converged)
-      throw new IllegalStateException(
-        s"DedupClusters.componentsBigStar: no fixed point after $MaxStarRounds alternations")
-    // fixed point = star forest: every non-min member carries exactly one
-    // edge (member, component-min); singletons label themselves
-    val labels = nodes
-      .join(edges.select(col("u").as("node"), col("v").as("star_rep")), Seq("node"), "left")
-      .select(col("node").as("doc_id"), coalesce(col("star_rep"), col("node")).as("rep"))
-    (labels, iter)
-  }
-
   /** Dedup verdict per doc: its cluster representative and whether it
     * survives (is the representative).
     */
   def decisions(corpus: DataFrame, pairs: DataFrame): DataFrame =
     components(corpus, pairs)
-      .select(col("doc_id"), col("rep"), (col("doc_id") === col("rep")).as("keep"))
-
-  /** [[decisions]] computed with the [[componentsBigStar]] strategy —
-    * same output, O(log d) rounds instead of O(d).
-    */
-  def decisionsBigStar(corpus: DataFrame, pairs: DataFrame): DataFrame =
-    componentsBigStar(corpus, pairs)._1
       .select(col("doc_id"), col("rep"), (col("doc_id") === col("rep")).as("keep"))
 
   /** THE END-TO-END DEDUP PIPELINE: corpus → MinHash signatures → banded
@@ -296,23 +183,19 @@ object DedupClusters {
     * the quality double with identical IEEE operations (the basis of the
     * hash-matched `text_quality` row).
     */
-  def canonicalByQualityOracleSql: String = {
-    val qualityInner = graft.text.TextAnalysis
-      .qualityScoreOracleSql(from = "corpus", ordered = false)
-    reachCtes +
-      s""",
-         |dec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node),
-         |q AS ($qualityInner),
-         |m AS (SELECT dec.rep, q.doc_id, q.quality
-         |      FROM dec JOIN q ON dec.doc_id = q.doc_id)
-         |SELECT rep AS cluster_rep, doc_id AS canonical_id, quality, n_members
-         |FROM (SELECT m.*,
-         |             count(*) OVER (PARTITION BY rep) AS n_members,
-         |             row_number() OVER (PARTITION BY rep
-         |                                ORDER BY quality DESC, doc_id) AS rn
-         |      FROM m)
-         |WHERE rn = 1 ORDER BY cluster_rep""".stripMargin
-  }
+  def canonicalByQualityOracleSql: String =
+    Seq(clusterCtes, qualityCte("corpus"),
+      """m AS (SELECT dec.rep, q.doc_id, q.quality
+        |      FROM dec JOIN q ON dec.doc_id = q.doc_id)""".stripMargin)
+      .mkString(",\n") +
+      """
+        |SELECT rep AS cluster_rep, doc_id AS canonical_id, quality, n_members
+        |FROM (SELECT m.*,
+        |             count(*) OVER (PARTITION BY rep) AS n_members,
+        |             row_number() OVER (PARTITION BY rep
+        |                                ORDER BY quality DESC, doc_id) AS rn
+        |      FROM m)
+        |WHERE rn = 1 ORDER BY cluster_rep""".stripMargin
 
   /** END-TO-END quality-keep dedup: the [[cleaned]] pipeline with
     * [[canonicalByQuality]]'s winner rule — every near-dup cluster
@@ -329,25 +212,12 @@ object DedupClusters {
       .select(col("doc_id"), md5(col("text")).as("content_hash"))
 
   /** Oracle SQL for [[cleanedByQuality]]. */
-  def cleanedByQualityOracleSql: String = {
-    val qualityInner = graft.text.TextAnalysis
-      .qualityScoreOracleSql(from = "corpus", ordered = false)
-    reachCtes +
-      s""",
-         |dec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node),
-         |q AS ($qualityInner),
-         |canon AS (
-         |  SELECT doc_id FROM (
-         |    SELECT q.doc_id,
-         |           row_number() OVER (PARTITION BY dec.rep
-         |                              ORDER BY q.quality DESC, q.doc_id) AS rn
-         |    FROM dec JOIN q ON dec.doc_id = q.doc_id)
-         |  WHERE rn = 1
-         |)
-         |SELECT c.doc_id, md5(c.text) AS content_hash
-         |FROM corpus c JOIN canon ON c.doc_id = canon.doc_id
-         |ORDER BY c.doc_id""".stripMargin
-  }
+  def cleanedByQualityOracleSql: String =
+    Seq(clusterCtes, qualityCte("corpus"), CanonCte).mkString(",\n") +
+      """
+        |SELECT c.doc_id, md5(c.text) AS content_hash
+        |FROM corpus c JOIN canon ON c.doc_id = canon.doc_id
+        |ORDER BY c.doc_id""".stripMargin
 
   /** CTE fragments (NO `WITH` prefix — the caller's chain must open with
     * `WITH RECURSIVE`) computing the quality-keep canonical id set over an
@@ -357,13 +227,40 @@ object DedupClusters {
     * pipelines that dedup mid-stream ([[graft.text.TrainingShard
     * .manifestNearDup]]).
     */
-  def canonicalCtesOverCorpus(corpusName: String): String = {
-    val pairsSql = MinHashLSH.nearDupPairsOracleSqlCorpus(
-      s"SELECT doc_id, text FROM $corpusName")
-    val qualityInner = graft.text.TextAnalysis
-      .qualityScoreOracleSql(from = corpusName, ordered = false)
-    s"""pairs AS ($pairsSql),
-       |edges AS (
+  def canonicalCtesOverCorpus(corpusName: String): String =
+    Seq(pairsCte(s"SELECT doc_id, text FROM $corpusName"), edgesReachCtes(corpusName),
+      DecCte, qualityCte(corpusName), CanonCte).mkString(",\n")
+
+  /** Recursive-reachability CTE prefix over the augmented corpus (exact
+    * oracle for the iterative propagation), ending at `reach(node, label)`.
+    */
+  private def reachCtes: String = reachCtesFor(DedupCorpus.augmentSql)
+
+  /** [[reachCtes]] over an ARBITRARY corpus SQL (doc_id, text) — the seam
+    * [[DataSplit.assignIncrementalOracleSql]] uses to replay the SAVED
+    * snapshot's clusters (the base corpus) inside the same query that
+    * clusters the new snapshot.
+    */
+  private[graft] def reachCtesFor(corpusSql: String): String =
+    "WITH RECURSIVE " +
+      Seq(pairsCte(corpusSql), s"corpus AS ($corpusSql)", edgesReachCtes("corpus")).mkString(",\n")
+
+  /** [[reachCtes]] plus `dec(doc_id, rep)`, every doc's component minimum:
+    * the shared cluster prefix the dedup, split and decontamination
+    * oracles build their verdicts on.
+    */
+  private[graft] def clusterCtes: String = reachCtes + ",\n" + DecCte
+
+  /** `pairs(doc_a, doc_b)`: the MinHash oracle's near-dup pairs over `corpusSql`. */
+  private def pairsCte(corpusSql: String): String =
+    s"pairs AS (${MinHashLSH.nearDupPairsOracleSqlCorpus(corpusSql)})"
+
+  /** `edges` (closed neighborhood: both directions plus a self-loop) and
+    * the recursive `reach(node, label)` over `pairs` and the corpus CTE
+    * named `corpusName`.
+    */
+  private def edgesReachCtes(corpusName: String): String =
+    s"""edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
        |  UNION ALL SELECT doc_b, doc_a FROM pairs
        |  UNION ALL SELECT doc_id, doc_id FROM $corpusName
@@ -373,63 +270,41 @@ object DedupClusters {
        |  UNION
        |  SELECT e.src, r.label
        |  FROM reach r JOIN edges e ON e.dst = r.node
-       |),
-       |dec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node),
-       |q AS ($qualityInner),
-       |canon AS (
-       |  SELECT doc_id FROM (
-       |    SELECT q.doc_id,
-       |           row_number() OVER (PARTITION BY dec.rep
-       |                              ORDER BY q.quality DESC, q.doc_id) AS rn
-       |    FROM dec JOIN q ON dec.doc_id = q.doc_id)
-       |  WHERE rn = 1
        |)""".stripMargin
-  }
 
-  /** Shared recursive-reachability CTE prefix (exact oracle for the
-    * iterative propagation; [[DataSplit]] builds its verdict oracles on the
-    * same clusters).
-    */
-  private[graft] def reachCtes: String = reachCtesFor(DedupCorpus.augmentSql)
+  private val DecCte =
+    "dec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node)"
 
-  /** [[reachCtes]] over an ARBITRARY corpus SQL (doc_id, text) — the seam
-    * [[DataSplit.assignIncrementalOracleSql]] uses to replay the SAVED
-    * snapshot's clusters (the base corpus) inside the same query that
-    * clusters the new snapshot.
-    */
-  private[graft] def reachCtesFor(corpusSql: String): String = {
-    val pairsSql = MinHashLSH.nearDupPairsOracleSqlCorpus(corpusSql)
-    s"""WITH RECURSIVE pairs AS ($pairsSql),
-       |corpus AS ($corpusSql),
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs
-       |  UNION ALL SELECT doc_id, doc_id FROM corpus
-       |),
-       |reach(node, label) AS (
-       |  SELECT doc_id, doc_id FROM corpus
-       |  UNION
-       |  SELECT e.src, r.label
-       |  FROM reach r JOIN edges e ON e.dst = r.node
-       |)""".stripMargin
-  }
+  /** `q(doc_id, quality)` over the corpus CTE named `corpusName`. */
+  private def qualityCte(corpusName: String): String =
+    s"q AS (${graft.text.TextAnalysis.qualityScoreOracleSql(from = corpusName, ordered = false)})"
+
+  /** `canon(doc_id)`: each cluster's best-quality member, ties to min id. */
+  private val CanonCte =
+    """canon AS (
+      |  SELECT doc_id FROM (
+      |    SELECT q.doc_id,
+      |           row_number() OVER (PARTITION BY dec.rep
+      |                              ORDER BY q.quality DESC, q.doc_id) AS rn
+      |    FROM dec JOIN q ON dec.doc_id = q.doc_id)
+      |  WHERE rn = 1
+      |)""".stripMargin
 
   /** Oracle SQL: recursive min-label reachability over the SAME pairs the
     * MinHash oracle computes, then min label per node.
     */
   def decisionsOracleSql: String =
     reachCtes +
-      s"""
-         |SELECT node AS doc_id, min(label) AS rep, node = min(label) AS keep
-         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
+      """
+        |SELECT node AS doc_id, min(label) AS rep, node = min(label) AS keep
+        |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
 
   /** Oracle SQL for [[cleaned]]. */
   def cleanedOracleSql: String =
-    reachCtes +
-      s""",
-         |dec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node)
-         |SELECT c.doc_id, md5(c.text) AS content_hash
-         |FROM corpus c JOIN dec ON c.doc_id = dec.doc_id
-         |WHERE c.doc_id = dec.rep
-         |ORDER BY c.doc_id""".stripMargin
+    clusterCtes +
+      """
+        |SELECT c.doc_id, md5(c.text) AS content_hash
+        |FROM corpus c JOIN dec ON c.doc_id = dec.doc_id
+        |WHERE c.doc_id = dec.rep
+        |ORDER BY c.doc_id""".stripMargin
 }

@@ -169,16 +169,12 @@ final class Sampled private (
 
   /** Horvitz–Thompson scale-up (Horvitz & Thompson, JASA 1952) of an
     * additive aggregate (count/sum) computed on the sampled data:
-    * estimate = aggregate / ratio. This is the estimator
-    * the reference's comparator applies when judging sampled output
-    * (RSMRResultComparator.java:58-71, T7).
-    *
-    * Uses the designed ratio by default (the reference's choice); pass
-    * `actual = true` to scale by the achieved rate instead (lower variance,
-    * costs the two counting jobs).
+    * estimate = aggregate / ratio, with ratio the designed rate (the
+    * reference's choice; building the estimate runs no counting job).
+    * This is the estimator the reference's comparator applies when judging
+    * sampled output (RSMRResultComparator.java:58-71, T7).
     */
-  def htScale(aggregate: Column, actual: Boolean = false): Column =
-    aggregate / lit(if (actual) actualRatio else ratio)
+  def htScale(aggregate: Column): Column = aggregate / lit(ratio)
 
   /** Post-run report (T6). Triggers the single accounting job. */
   def report(): SamplingReport = SamplingReport(

@@ -199,9 +199,8 @@ object Decontaminate {
     * predicate, the same contaminated-rep anti-join.
     */
   def cleanFuzzyOracleSql(benchEvery: Long = BenchEvery): String =
-    graft.dedup.DedupClusters.reachCtes +
+    graft.dedup.DedupClusters.clusterCtes +
       s""",
-         |dec AS (SELECT node AS doc_id, min(label) AS rep FROM reach GROUP BY node),
          |bad AS (SELECT DISTINCT rep FROM dec WHERE ${isBenchSql("doc_id", benchEvery)})
          |SELECT c.doc_id, CAST(length(c.text) AS BIGINT) AS n_chars
          |FROM corpus c JOIN dec ON dec.doc_id = c.doc_id

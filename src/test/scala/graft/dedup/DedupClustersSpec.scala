@@ -21,15 +21,13 @@ class DedupClustersSpec extends SparkSpec {
     assert(out(5L) === ((5L, true)))
   }
 
-  test("empty corpus: both CC variants return empty instead of crashing") {
+  test("empty corpus: components returns empty instead of crashing") {
     // a corpus slice where curation rejects everything is legal; the
     // convergence sum over zero rows is null and must read as the fixed
-    // point, not an NPE (the bigstar variant always guarded this — the
-    // min-label loop now does too)
+    // point, not an NPE
     val corpus = Seq.empty[Long].toDF("doc_id")
     val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(DedupClusters.components(corpus, pairs).count() === 0)
-    assert(DedupClusters.componentsBigStar(corpus, pairs)._1.count() === 0)
   }
 
   test("edge shuffle width follows the session's shuffle-partition config") {
@@ -50,47 +48,56 @@ class DedupClustersSpec extends SparkSpec {
     assert(e.getMessage.contains("no fixed point"))
   }
 
-  test("bigstar: hand-built graph matches min-label decisions") {
-    val corpus = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")
-    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    val out = DedupClusters.decisionsBigStar(corpus, pairs)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    assert(out === Map(
-      1L -> ((1L, true)), 2L -> ((1L, false)), 3L -> ((1L, false)),
-      4L -> ((4L, true)), 5L -> ((5L, true))))
-  }
-
-  test("bigstar: deep path graph converges in O(log d) alternations where min-label throws") {
-    // a 200-node path: diameter 199 ≫ MaxIterations=20, the exact shape the
-    // min-label loop rejects (test above) — star contraction must both
-    // solve it AND do so in logarithmically few rounds
-    val n = 200L
-    val corpus = (0L until n).toDF("doc_id")
-    val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = DedupClusters.componentsBigStar(corpus, pairs)
-    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length === n)
-    assert(got.forall(_._2 == 0L), s"non-zero rep in ${got.filter(_._2 != 0L).take(5).toSeq}")
-    assert(rounds <= 12, s"expected O(log 199) ≈ 8 alternations, took $rounds")
-  }
-
-  test("bigstar: singleton-only corpus (no edges) labels every node itself") {
+  test("singleton-only corpus (no edges) labels every node itself") {
     val corpus = Seq(10L, 20L, 30L).toDF("doc_id")
     val pairs = spark.emptyDataset[(Long, Long)].toDF("doc_a", "doc_b")
-    val (labels, rounds) = DedupClusters.componentsBigStar(corpus, pairs)
-    assert(rounds === 0)
+    val labels = DedupClusters.components(corpus, pairs)
     assert(labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
       Set((10L, 10L), (20L, 20L), (30L, 30L)))
   }
 
-  test("bigstar: agrees with min-label on the real sf0.001 near-dup graph") {
+  /** Component minimum per node by plain union-find: each union links the
+    * larger root under the smaller, so every root is its component's min.
+    */
+  private def unionFindReps(nodes: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    def find(x: Long): Long = {
+      val p = parent(x)
+      if (p == x) x else { val root = find(p); parent(x) = root; root }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
+  test("components equals union-find on the sf0.001 graph and random graphs") {
     val corpus = DedupCorpus.augment(Tables.documents(spark, sf001))
     val pairs = MinHashLSH.nearDupPairs(MinHashLSH.signatures(corpus))
-    val minLabel = DedupClusters.components(corpus, pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    val (bigStar, _) = DedupClusters.componentsBigStar(corpus, pairs)
-    val star = bigStar.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(star === minLabel)
+    val ids = corpus.select("doc_id").collect().map(_.getLong(0)).toSeq
+    val edges = pairs.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(edges.nonEmpty)
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(DedupClusters.components(corpus, pairs)) === unionFindReps(ids, edges))
+    spark.catalog.clearCache()
+
+    // at most 20 nodes, so every component's diameter stays under
+    // MaxIterations; sparse ids, plus a self-pair, a repeated (reversed)
+    // pair and a node no pair touches in every graph
+    val rng = new scala.util.Random(20141103L)
+    (1 to 20).foreach { g =>
+      val n = 2 + rng.nextInt(DedupClusters.MaxIterations - 1)
+      val nodes = rng.shuffle((0L until 1000L).toVector).take(n)
+      val linked = nodes.init // the last node stays isolated
+      val random = Seq.fill(rng.nextInt(2 * n))(
+        (linked(rng.nextInt(linked.size)), linked(rng.nextInt(linked.size))))
+      val self = linked.head -> linked.head
+      val gPairs = (self +: random) :+ random.headOption.getOrElse(self).swap
+      val got = labels(DedupClusters.components(nodes.toDF("doc_id"), gPairs.toDF("doc_a", "doc_b")))
+      assert(got === unionFindReps(nodes, gPairs), s"graph $g")
+    }
   }
 
   test("cleaned pipeline keeps exactly the cluster representatives") {

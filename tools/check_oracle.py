@@ -2,6 +2,9 @@
 """Local mirror of the driver's correctness gate: for each query parquet
 dumped by graft.Verify, run the oracle SQL in DuckDB over the same testdata
 tables and compare (columns sorted by name, rows sorted, values hashed).
+Every key of oracle_sql.json must have an output dir, so a query whose
+result was never written fails instead of passing unchecked. Ends with
+`<n> hash matches, <m> rows-only` and ALL OK / FAIL.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
@@ -16,14 +19,17 @@ for t in "region nation customer supplier part orders lineitem events documents 
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-fails = 0
-for name in sorted(os.listdir(out_dir)):
+dirs = sorted(n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n)))
+fails = matches = rows_only = 0
+for name in sorted(set(oracle) - set(dirs)):
+    fails += 1
+    print(f"{name:28s} MISSING: oracle key with no output dir")
+for name in dirs:
     d = os.path.join(out_dir, name)
-    if not os.path.isdir(d):
-        continue
     got = con.sql(f"SELECT * FROM '{d}/*.parquet'").df()
     if name not in oracle:
         status = f"rows-only: {len(got)} rows"
+        rows_only += 1
         if len(got) == 0:
             fails += 1
             status += "  << EMPTY"
@@ -48,6 +54,8 @@ for name in sorted(os.listdir(out_dir)):
         else:
             print("  spark cols:", list(got.columns), "duck cols:", list(exp.columns))
     else:
+        matches += 1
         print(f"{name:28s} OK ({len(gs)} rows)")
+print(f"{matches} hash matches, {rows_only} rows-only")
 print("FAIL" if fails else "ALL OK")
 sys.exit(1 if fails else 0)
