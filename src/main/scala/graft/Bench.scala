@@ -5,11 +5,20 @@ import graft.tools.Measure
 /** Benchmark main — one JSON line on stdout per the driver contract.
   *
   * Harness discipline (VERDICT r1 §wrong 4-5): one warmup pass per query
-  * (absorbs codegen + first-touch scan costs), then median of 3 timed
+  * (absorbs first-touch scan costs and codegen), then median of 3 timed
   * trials — interleaved round-robin across queries, with process-CPU time
   * recorded next to wall time (VERDICT r7 §wrong 2, contention
   * de-confounding); failures are never swallowed — a crashing query is
   * reported in an `errors` field and the process exits non-zero.
+  *
+  * The warm-up absorbs codegen only because [[GraftSession]] sizes Spark's
+  * codegen cache to the catalog: at sf0.001 the warm-up pass compiles
+  * about 2,680 classes and each timed pass 15 to 80. With Spark's default
+  * 100-class cache the round-robin evicts every class before its reuse,
+  * and each timed pass recompiles about 4,550 classes (66–89 s of Janino).
+  * `BENCH_SELF.json` carries the counts: `classes_per_pass` (warm-up
+  * first), `trial_classes` per query and trial, and the per-query median
+  * compile seconds in `queries_codegen`.
   *
   * Timed action: [[graft.tools.Measure.trial]], a noop-sink write, which
   * executes the FULL plan including each query's final orderBy (a
@@ -70,7 +79,11 @@ object Bench {
           None
       }
 
-    names.foreach(run(_, recordError = false)) // warmup
+    // classes compiled and compile seconds of one pass, summed over its queries
+    def passCodegen(trials: Seq[Measure.Trial]): (Long, Double) =
+      trials.map(_.classesCompiled).sum -> trials.map(_.codegenS).sum
+    val passes = scala.collection.mutable.ArrayBuffer(
+      passCodegen(names.flatMap(run(_, recordError = false)))) // warmup
     // Trials interleave round-robin (pass 1 over every query, then pass 2,
     // pass 3) instead of 3 back-to-back per query: a multi-minute host
     // contention window then costs each query at most one of its three
@@ -84,14 +97,23 @@ object Bench {
     val trialTimes = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val trialCpu = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val trialGc = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val trialCodegen = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val trialClasses = scala.collection.mutable.LinkedHashMap[String, Seq[Long]]()
     names.foreach { n =>
       trialTimes(n) = Seq.empty; trialCpu(n) = Seq.empty; trialGc(n) = Seq.empty
+      trialCodegen(n) = Seq.empty; trialClasses(n) = Seq.empty
     }
-    for (_ <- 1 to 3; name <- names) run(name, recordError = true).foreach { t =>
-      trialTimes(name) = trialTimes(name) :+ t.wallS
-      t.cpuS.foreach(c => trialCpu(name) = trialCpu(name) :+ c)
-      trialGc(name) = trialGc(name) :+ t.gcS
-    }
+    for (_ <- 1 to 3) passes += passCodegen(names.flatMap { name =>
+      val trial = run(name, recordError = true)
+      trial.foreach { t =>
+        trialTimes(name) = trialTimes(name) :+ t.wallS
+        t.cpuS.foreach(c => trialCpu(name) = trialCpu(name) :+ c)
+        trialGc(name) = trialGc(name) :+ t.gcS
+        trialCodegen(name) = trialCodegen(name) :+ t.codegenS
+        trialClasses(name) = trialClasses(name) :+ t.classesCompiled
+      }
+      trial
+    })
     val trialCounts = scala.collection.mutable.LinkedHashMap[String, Int]()
     names.foreach(n => trialCounts(n) = trialTimes.getOrElse(n, Seq.empty).size)
     def median(ts: Seq[Double]): Double = ts.sorted.apply(ts.size / 2)
@@ -166,13 +188,25 @@ object Bench {
         else Some(jq(k) + ":" + median(pairs.map { case (c, g) => c - g }))
       }
       .mkString("{", ",", "}")
+    // Codegen columns: the per-query median of Janino compile seconds and
+    // each trial's count of classes compiled (0 where every generated class
+    // was still in Spark's codegen cache), plus the catalog-wide count per
+    // pass and their compile seconds, warm-up first.
+    val codegenJson = trialCodegen
+      .collect { case (k, ts) if ts.nonEmpty => jq(k) + ":" + median(ts) }
+      .mkString("{", ",", "}")
+    val perTrialClassesJson = trialClasses
+      .map { case (k, ns) => jq(k) + ":" + ns.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+    val passClassesJson = passes.map(_._1).mkString("[", ",", "]")
+    val passCodegenJson = passes.map(_._2).mkString("[", ",", "]")
     // "cpus" on both artifacts (VERDICT r17 scaling block): the driver's
     // low-core scaling check can verify the $SPARK_GRAFT_CPUS contract
     // directly instead of inferring it from flat ratios
     // (suspect_cpus_ignored false-positived in r17).
     val cpusJson = scala.util.Try(cpus.trim.toInt).getOrElse(-1)
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpusJson,"queries":$qsFull,"queries_cpu":$cpuJson,"queries_gc":$gcJson,"queries_cpu_minus_gc":$cpuMinusGcJson,"trials":$trialsJson,"trial_times":$perTrialJson,"trial_cpu":$perTrialCpuJson,"trial_gc":$perTrialGcJson,"errors":$errJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpusJson,"queries":$qsFull,"queries_cpu":$cpuJson,"queries_gc":$gcJson,"queries_cpu_minus_gc":$cpuMinusGcJson,"trials":$trialsJson,"trial_times":$perTrialJson,"trial_cpu":$perTrialCpuJson,"trial_gc":$perTrialGcJson,"queries_codegen":$codegenJson,"trial_classes":$perTrialClassesJson,"classes_per_pass":$passClassesJson,"codegen_s_per_pass":$passCodegenJson,"errors":$errJson,"sf":"$sfDir"}"""
     // Self-contained archive of THIS bench invocation at the repo root
     // (VERDICT r10 §missing-3): the driver's BENCH_r{N}.json captures a
     // bounded stdout tail, which the 95-query stdout line outgrew twice

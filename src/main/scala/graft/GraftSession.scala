@@ -29,6 +29,29 @@ import org.apache.spark.sql.SparkSession
   *    UTF8String's vectorized fast path only with ICU off.
   *  - nanosAsLong: the driver has regenerated events.ts as
   *    TIMESTAMP(NANOS) in past rounds — keep reading either generation.
+  *  - codegen cache of 4096 classes: Spark's default LRU of 100 generated
+  *    classes is smaller than one pass over the AQP benchmark's catalog
+  *    mix (158 classes) or over the declared catalog (2,681 classes at
+  *    sf0.001), so it evicted every class before its reuse and Janino
+  *    recompiled each plan on every pass. 4096 holds the catalog's working
+  *    set with headroom; a resident class costs metaspace, not heap. The
+  *    cache is JVM-global: `CodeGenerator` builds it once, sized from the
+  *    first session that generates code, and every entry point builds that
+  *    session here. A later session's value is ignored.
+  *  - broadcast pieces of 512 KB: TorrentBroadcast writes every broadcast,
+  *    each stage's task binary included, through heap chunks of
+  *    `spark.broadcast.blockSize`. At the 4 MB default each chunk is a G1
+  *    humongous allocation (half a region or more: 1 MB at 2 MB regions),
+  *    and these piled up between young collections as the largest
+  *    humongous allocator of the benchmark's catalog runs (JFR allocation
+  *    profile); with the compile churn gone the collections came later and
+  *    the heap peak rose. 512 KB chunks are ordinary eden objects. Safe at
+  *    cluster scale: a piece is the unit executors fetch from the driver
+  *    and from each other, so a broadcast has 8x as many pieces (a 64 MB
+  *    one, the AQE broadcast threshold below, has 128 instead of 16). Each
+  *    piece costs one block-manager entry and one fetch, small beside
+  *    512 KB of payload, and more pieces give an executor more peers to
+  *    fetch from in parallel.
   *  - UI off: headless harness processes.
   */
 object GraftSession {
@@ -52,5 +75,7 @@ object GraftSession {
       // join inside the composed training-shard pipeline (dup side
       // ~19 MB), tripling that stage's CPU. Static threshold untouched.
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.broadcast.blockSize", "512k")
       .config("spark.ui.enabled", "false")
 }

@@ -6,8 +6,10 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The one measurement path of the timing tools ([[graft.Bench]],
   * [[ScaleProbe]], [[Profile]]): a timed trial of one query and a stage
@@ -20,8 +22,14 @@ object Measure {
     * rather than crashing the caller). `gcS` is stop-the-world collection
     * time summed over every collector: a CPU reading that rises together
     * with it points at heap pressure, not the plan (VERDICT r13 item 4).
+    * `codegenS` is Janino compile time and `classesCompiled` the number of
+    * generated classes compiled, both read from Spark's JVM-global codegen
+    * counters: a class served from the codegen cache adds to neither, so a
+    * warm run of a resident plan reads 0. In local mode the counters also
+    * see compiles on executor threads, whose time stage CPU counts too.
     */
-  final case class Trial(wallS: Double, cpuS: Option[Double], gcS: Double)
+  final case class Trial(
+      wallS: Double, cpuS: Option[Double], gcS: Double, codegenS: Double, classesCompiled: Long)
 
   // Process CPU next to wall (VERDICT r7 §wrong 2): on a contended host
   // wall time inflates while the query's own CPU stays flat, so the pair
@@ -36,6 +44,8 @@ object Measure {
   private def gcNowMs(): Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(b => math.max(b.getCollectionTime, 0L)).sum
+  private def compileNowNs(): Long = CodeGenerator.compileTime
+  private def compilesNow(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Time one run of `df` into the noop sink.
     *
@@ -53,13 +63,16 @@ object Measure {
   def trial(spark: SparkSession)(df: => DataFrame): Trial = {
     val c0 = cpuNowNs()
     val g0 = gcNowMs()
+    val j0 = compileNowNs()
+    val n0 = compilesNow()
     val t0 = System.nanoTime()
     try {
       df.write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       val c1 = cpuNowNs()
       val g1 = gcNowMs()
-      Trial(wall, if (c0 < 0 || c1 < 0) None else Some((c1 - c0) / 1e9), (g1 - g0) / 1e3)
+      Trial(wall, if (c0 < 0 || c1 < 0) None else Some((c1 - c0) / 1e9), (g1 - g0) / 1e3,
+        (compileNowNs() - j0) / 1e9, compilesNow() - n0)
     } finally spark.catalog.clearCache()
   }
 

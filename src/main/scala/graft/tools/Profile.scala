@@ -3,16 +3,24 @@ package graft.tools
 /** Where a query's time goes (dev tool). Each name — and, for a probe
   * family, each factor — is warmed up once, then run for three trials
   * under [[Measure.stages]]. Printed per run:
-  *  - the median trial's wall, process CPU and GC, with all three walls;
+  *  - the median trial's wall, process CPU and GC, with all three walls,
+  *    and each trial's codegen compile seconds and classes compiled;
   *  - that trial's job timeline: start and end offsets from the query
   *    start and the gap before each job, which tells many small sequential
   *    jobs apart from one CPU-bound stage;
   *  - its stage table: tasks, executor CPU, deserialization CPU, summed
   *    task run time, stage wall, end offset, input and shuffle records,
   *    shuffle read and write MB;
-  *  - the driver-side gap: process CPU minus stage and deserialization
-  *    CPU, i.e. planning, AQE re-optimization, codegen and other driver
-  *    work.
+  *  - the driver-side gap: process CPU minus stage CPU, deserialization
+  *    CPU and codegen compile time, i.e. planning, AQE re-optimization,
+  *    JIT, GC and other driver work. Codegen is its own term; a class
+  *    compiled inside a task is in stage CPU as well, so the rest is a
+  *    lower bound.
+  *
+  * Looping one query hides codegen cache thrash: its classes stay
+  * resident unless it alone needs more than the cache holds, so a warm
+  * trial here reads 0 classes even where a round-robin over the catalog
+  * (as in [[graft.Bench]]) would evict and recompile them on every pass.
   *
   * A [[ScaleProbe.Families]] name runs the probe's ×k fixture through
   * [[ScaleProbe.runAt]], so shuffle width and per-family confs are those
@@ -22,7 +30,8 @@ package graft.tools
   *
   * Usage: `runMain graft.tools.Profile <query|family>… [factor…]`
   * (factor default 1); env SPARK_GRAFT_SF_DIR names the fixture (required),
-  * SPARK_GRAFT_CPUS the core count (default 32).
+  * SPARK_GRAFT_CPUS the core count (default: the host's available
+  * processors).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -31,7 +40,7 @@ object Profile {
     val factors = if (factorArgs.isEmpty) Seq(1) else factorArgs.map(_.toInt)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("set SPARK_GRAFT_SF_DIR to a testdata scale-factor directory"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fx = new ScaleProbe.Fixtures(spark, sfDir)
@@ -48,16 +57,18 @@ object Profile {
     runs.foreach { case (label, run) =>
       run() // warmup: codegen, first-touch scan, saved artifacts
       val recs = (1 to 3).map(_ => Measure.stages(spark)(run()))
-      report(label, recs.sortBy(_.result.wallS).apply(1), recs.map(_.result.wallS))
+      report(label, recs.sortBy(_.result.wallS).apply(1), recs.map(_.result))
     }
     spark.stop()
   }
 
-  private def report(label: String, rec: Measure.Recording[Measure.Trial], walls: Seq[Double]): Unit = {
+  private def report(label: String, rec: Measure.Recording[Measure.Trial], trials: Seq[Measure.Trial]): Unit = {
     val t = rec.result
     def secs(v: Option[Double]) = v.fold("n/a")(c => f"$c%.2fs")
     println(f"##### $label wall=${t.wallS}%.2fs cpu=${secs(t.cpuS)} gc=${t.gcS}%.2fs " +
-      s"(trials ${walls.map(w => f"$w%.2f").mkString("/")})")
+      s"(trials ${trials.map(r => f"${r.wallS}%.2f").mkString("/")}; " +
+      s"codegen ${trials.map(r => f"${r.codegenS}%.2f").mkString("/")}s, " +
+      s"classes ${trials.map(_.classesCompiled).mkString("/")})")
     val stageCpu = rec.stages.map(_.cpuS).sum
     val deserCpu = rec.stages.map(_.deserCpuS).sum
     println(f"  jobs=${rec.jobs.size} stages=${rec.stages.size} " +
@@ -77,8 +88,9 @@ object Profile {
         f"sR=${r.shuffleReadMB}%7.2fMB sW=${r.shuffleWriteMB}%7.2fMB  ${r.name.take(60)}")
     }
     println("  driver-side gap: " + t.cpuS.fold("n/a (no process CPU on this JVM)") { c =>
-      f"process cpu $c%.2fs - stage cpu $stageCpu%.2fs - deser cpu $deserCpu%.2fs = " +
-        f"${c - stageCpu - deserCpu}%.2fs"
+      f"process cpu $c%.2fs - stage cpu $stageCpu%.2fs - deser cpu $deserCpu%.2fs - " +
+        f"codegen ${t.codegenS}%.2fs (${t.classesCompiled} classes) = " +
+        f"${c - stageCpu - deserCpu - t.codegenS}%.2fs"
     })
   }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.storage.StorageLevel
 
 import graft.{SparkEntry, SparkSpec}
@@ -37,5 +38,14 @@ class MeasureSpec extends SparkSpec {
     assert(stageCpu > 0)
     assert(stageCpu <= rec.result.cpuS.get,
       s"stage CPU $stageCpu s exceeds process CPU ${rec.result.cpuS.get} s")
+  }
+
+  test("a never-run plan shape compiles generated classes on its first trial") {
+    // a literal unique to this run is inlined into the generated code, so
+    // no earlier plan in this JVM can have left the class in the cache
+    val nonce = System.nanoTime()
+    val t = Measure.trial(spark)(spark.range(1000).select((col("id") * lit(nonce)).as("x")))
+    assert(t.classesCompiled > 0, "a new plan shape compiled no class")
+    assert(t.codegenS > 0)
   }
 }
