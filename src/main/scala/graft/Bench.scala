@@ -51,9 +51,8 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.scheduler.DAGScheduler", org.apache.logging.log4j.Level.OFF)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      .getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.local(cpus).getOrCreate()
     // ERROR, not WARN: the deliberate 32-256-row bucket-offset windows
     // (TokenBudget/RangeRank/GlobalShuffle/QualityDeciles scaladoc) emit a
     // WindowExec warning PER STAGE, which flooded r13's driver capture with
@@ -204,9 +203,8 @@ object Bench {
     // low-core scaling check can verify the $SPARK_GRAFT_CPUS contract
     // directly instead of inferring it from flat ratios
     // (suspect_cpus_ignored false-positived in r17).
-    val cpusJson = scala.util.Try(cpus.trim.toInt).getOrElse(-1)
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpusJson,"queries":$qsFull,"queries_cpu":$cpuJson,"queries_gc":$gcJson,"queries_cpu_minus_gc":$cpuMinusGcJson,"trials":$trialsJson,"trial_times":$perTrialJson,"trial_cpu":$perTrialCpuJson,"trial_gc":$perTrialGcJson,"queries_codegen":$codegenJson,"trial_classes":$perTrialClassesJson,"classes_per_pass":$passClassesJson,"codegen_s_per_pass":$passCodegenJson,"errors":$errJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qsFull,"queries_cpu":$cpuJson,"queries_gc":$gcJson,"queries_cpu_minus_gc":$cpuMinusGcJson,"trials":$trialsJson,"trial_times":$perTrialJson,"trial_cpu":$perTrialCpuJson,"trial_gc":$perTrialGcJson,"queries_codegen":$codegenJson,"trial_classes":$perTrialClassesJson,"classes_per_pass":$passClassesJson,"codegen_s_per_pass":$passCodegenJson,"errors":$errJson,"sf":"$sfDir"}"""
     // Self-contained archive of THIS bench invocation at the repo root
     // (VERDICT r10 §missing-3): the driver's BENCH_r{N}.json captures a
     // bounded stdout tail, which the 95-query stdout line outgrew twice
@@ -216,7 +214,7 @@ object Bench {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_SELF.json"), fullJson)
     val stdoutLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpusJson,"n_queries":${results.size},"n_errors":${errors.size},"queries":$qs,"full":"BENCH_SELF.json","errors":$errJsonStdout,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"n_queries":${results.size},"n_errors":${errors.size},"queries":$qs,"full":"BENCH_SELF.json","errors":$errJsonStdout,"sf":"$sfDir"}"""
     // Full per-query map FIRST (a human scrolling the log gets everything;
     // so does any capture longer than 2000 chars), then the compact
     // summary as the FINAL line — the only line guaranteed to sit whole

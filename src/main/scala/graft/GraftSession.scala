@@ -12,9 +12,8 @@ import org.apache.spark.sql.SparkSession
   *  - GraftExtensions: the engine's Catalyst rules/strategies
   *    (SamplePushdown et al.) must be present in EVERY entry point, or a
   *    harness measures different plans than the driver runs.
-  *  - shuffle.partitions: sized by the caller (cores for the driver
-  *    contract's mains, 32 for the perf harnesses) — never Spark's
-  *    default 200 on local[32].
+  *  - shuffle.partitions: sized by the caller (the core count for every
+  *    main, see [[local]]) — never Spark's default 200 on a few cores.
   *  - UTC session timezone: the oracle (DuckDB) computes date_trunc in
   *    UTC; a host-zone session diverges on every timestamp column.
   *  - bypassMergeThreshold=1: always the serialized sort shuffle writer —
@@ -55,6 +54,24 @@ import org.apache.spark.sql.SparkSession
   *  - UI off: headless harness processes.
   */
 object GraftSession {
+
+  private val CpusVar = "SPARK_GRAFT_CPUS"
+
+  /** The core count of every main: `SPARK_GRAFT_CPUS`, or the host's
+    * available processors when it is unset. */
+  def cpus(): Int = parseCpus(sys.env.get(CpusVar))
+
+  /** [[cpus]]' rule over the variable's value; a non-integer or
+    * non-positive value fails with a message naming the variable. */
+  def parseCpus(value: Option[String]): Int = value match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$CpusVar must be a positive integer, got '$v'"))
+  }
+
+  /** [[builder]] for `local[n]` with `n` shuffle partitions — the session
+    * of every main, at `n` = [[cpus]] unless the caller passes it. */
+  def local(n: Int = cpus()): SparkSession.Builder = builder(s"local[$n]", n.toString)
 
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()

@@ -52,9 +52,7 @@ object Main {
     new java.io.File(in, s"$table.parquet").exists()
 
   private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -283,9 +283,7 @@ object RatioLadder {
       .map(_.split(",").map(_.toDouble).toSeq)
       .getOrElse(Seq(1.0, 0.5, 0.25, 0.1, 0.01))
     val only = args.lift(3).map(_.split(",").toSet) // optional family filter
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 

@@ -9,9 +9,7 @@ object Verify {
     // dump to those queries (local iteration); the driver passes only two.
     val (Array(sfDir, outDir), only) = args.splitAt(2)
     val selected = if (only.isEmpty) SparkEntry.all else only.toSeq.map(SparkEntry.query)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A failing query must leave a TRACE, not a hole: in round 11 two broken

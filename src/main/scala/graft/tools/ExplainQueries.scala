@@ -12,8 +12,7 @@ object ExplainQueries {
     val queries =
       if (args.length > 1) args.drop(1).toSeq.map(graft.SparkEntry.query)
       else graft.SparkEntry.all.sortBy(_.name)
-    val spark = graft.GraftSession.builder("local[4]", "4")
-      .getOrCreate()
+    val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     queries.foreach { q =>
       println(s"===== ${q.name} =====")

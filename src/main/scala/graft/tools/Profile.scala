@@ -30,8 +30,7 @@ package graft.tools
   *
   * Usage: `runMain graft.tools.Profile <query|family>… [factor…]`
   * (factor default 1); env SPARK_GRAFT_SF_DIR names the fixture (required),
-  * SPARK_GRAFT_CPUS the core count (default: the host's available
-  * processors).
+  * SPARK_GRAFT_CPUS the core count ([[graft.GraftSession.cpus]]).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -40,8 +39,7 @@ object Profile {
     val factors = if (factorArgs.isEmpty) Seq(1) else factorArgs.map(_.toInt)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("set SPARK_GRAFT_SF_DIR to a testdata scale-factor directory"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fx = new ScaleProbe.Fixtures(spark, sfDir)
 

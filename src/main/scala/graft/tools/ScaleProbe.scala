@@ -2,47 +2,48 @@ package graft.tools
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{CosinePairs, DedupCorpus, DedupClusters, JaccardPairs, MinHashLSH}
 import graft.queries.Tables
 
-/** Synthetic scale probe: explode the sf-dir fixtures ×k (union of
-  * transformed copies) and time the heaviest engine operators at each
-  * factor, asserting process-CPU time grows ≤ ~linearly (wall recorded
-  * alongside; see the verdict comment in main for why CPU carries the
-  * verdict on this noisy shared host) — the cheapest local[32]
+/** Synthetic scale probe: explode the sf-dir fixtures ×k and time the
+  * heaviest engine operators at each factor, asserting process-CPU time
+  * grows ≤ ~linearly (wall recorded alongside; see the verdict comment in
+  * main for why CPU carries the verdict on a noisy shared host) — local
   * evidence that the 100 TB design claims (banded joins, bounded buckets,
   * one-shuffle windows) hold beyond the fixture scale.
   *
-  * Copy construction matters for honesty:
-  *  - documents: each copy applies a per-copy LETTER ROTATION cipher
-  *    (translate a→b→c…, by k) so copies share (almost) no vocabulary —
-  *    plain duplication would make every doc a cross-copy near-duplicate
-  *    and the dedup pair count quadratic IN THE FIXTURE, not the engine.
-  *    With disjoint vocabularies each copy carries its own injected-dup
-  *    structure, so outputs and join work scale ~k×, which is exactly what
-  *    a k×-larger real corpus does.
+  * Every ×k fixture comes from one primitive, [[copies]]: the base rows
+  * tagged with a copy index in ONE plan branch, with column-valued
+  * per-copy transforms. Copy construction matters for honesty:
+  *  - documents: every token of copy i > 0 gets the suffix `q<i>`, so
+  *    copies share no vocabulary — plain duplication would make every doc a
+  *    cross-copy near-duplicate and the dedup pair count quadratic IN THE
+  *    FIXTURE, not the engine. With disjoint vocabularies each copy
+  *    carries its own injected-dup structure, so outputs and join work
+  *    scale ~k×, which is exactly what a k×-larger real corpus does.
   *  - events: user_id/event_id shifted per copy → k× users at the same
   *    per-user event density (what growth looks like in production).
   *  - every exploded fixture is repartitioned to 32·k — CONSTANT bytes
   *    per task at every factor, the invariant a real cluster's fixed
-  *    split size (128 MB) provides. A bare ×k union is k scan partitions,
-  *    which breaks the comparison twice: a ×8 fixture fills only 8 of the
-  *    32 cores (higher per-core L3/memory-bandwidth headroom → CPU
-  *    seconds read artificially LOW on the small factor; an r11 sweep
-  *    measured tf-idf's explode stage at 7× CPU for 4× rows from that
-  *    alone), and once branches ≥ cores, per-TASK input grows with k, so
-  *    map-side partial-aggregation hash state falls out of cache on the
-  *    big factor only (the r11 pair-family probes read ~2× per-row CPU at
-  *    ×32 from that). Constant split size removes both at once — every
-  *    factor saturates all cores AND carries identical per-task state.
+  *    split size (128 MB) provides. k copies of a few base partitions
+  *    break the comparison twice: a small factor fills only some of the
+  *    cores (higher per-core L3/memory-bandwidth headroom → CPU seconds
+  *    read artificially LOW on the small factor; an r11 sweep measured
+  *    tf-idf's explode stage at 7× CPU for 4× rows from that alone), and
+  *    per-TASK input grows with k, so map-side partial-aggregation hash
+  *    state falls out of cache on the big factor only (the r11 pair-family
+  *    probes read ~2× per-row CPU at ×32 from that). Constant split size
+  *    removes both at once — every factor saturates all cores AND carries
+  *    identical per-task state.
   *
   * Usage: `runMain graft.tools.ScaleProbe [factors] [family...]` (default
   * 1,8,32 over every family; trailing names restrict the run — for
-  * re-probing one fixed family without the full ~15 min sweep); env
-  * SPARK_GRAFT_SF_DIR picks the base fixture (default sf0.1).
+  * re-probing one fixed family without the full sweep); env
+  * SPARK_GRAFT_SF_DIR picks the base fixture (default sf0.1) and
+  * SPARK_GRAFT_CPUS the core count ([[graft.GraftSession.cpus]]).
   * A full run writes PROFILE_SCALE.json to the working dir. A restricted
   * run MERGES its families' rows into the existing artifact whenever the
   * artifact's `sf` matches this probe's fixture, and only prints
@@ -84,13 +85,10 @@ object ScaleProbe {
     "graph_pagerank" -> ((k: Int) => math.max(32, 4 * k)),
     // r14 (VERDICT r13 item 7): the minhash pair family's SHUFFLES carry
     // band keys and 16-long signatures — 45.6 MB over 1024 reduce
-    // partitions at ×32 (44 KB each, StageCpu run in the artifact note).
-    // Its stage CPU already scaled 4.29 vs linear 4.0; the process-CPU
-    // excess was per-task overhead (87.8 s of task DESERIALIZATION at
-    // ×32 vs 6.5 s at ×8 — ∝ task count × union-fan-in plan size, a
-    // harness term). Note the asymmetry for doc families: the FIXTURE
-    // stays at explodeDocs' 32·k (document-sized rows, the scan side is
-    // bytes-realistic); only the shuffle partitions drop to the regime.
+    // partitions at ×32 (44 KB each). Note the asymmetry for doc
+    // families: the FIXTURE stays at explodeDocs' 32·k (document-sized
+    // rows, the scan side is bytes-realistic); only the shuffle
+    // partitions drop to the regime.
     "dedup_minhash_pairs" -> ((k: Int) => math.max(32, 4 * k)),
     // r15 (VERDICT r14 item 2): the forced-shuffle join-sampling probe
     // moves 3-4-column TPC-H rows (~30 B each) through both join
@@ -198,34 +196,13 @@ object ScaleProbe {
         "at both factors the r17 byte-exact-confirm chain reads 4.23 vs " +
         "linear 4.0 (r16 pre-confirm: 4.63); the confirm's candidate " +
         "collect + corpus join rides the same dup-mass scaling"),
-    // extended-factor drift checks (VERDICT r15 item 7) — keyed by the
+    // extended-factor drift check (VERDICT r15 item 7) — keyed by the
     // factor-suffixed merge-row name
-    "dedup_minhash_pairs__x8_64" ->
-      ("StageCpu 8/64 (r16): NON-DESER stage CPU 21.7->126.8s = 5.84 vs " +
-        "linear 8.0 — the plan's own work is SUB-linear at x64; the " +
-        "process-CPU ratio is task deserialization (10.4->316.1s, 768->6144 " +
-        "tasks each carrying the k-branch union fixture plan — a probe-" +
-        "harness term growing ~k^2, not the operator) + driver planning " +
-        "(19.9->87.5s). The r15 attribution of the 6.93 x8/x32 reading " +
-        "holds and strengthens at x64"),
     "docs_substring_dedup__x8_64" ->
       ("x8/x64 = 9.92 vs linear 8.0 bound 16.0 in the same forced-shuffle " +
         "regime as the base row, confirm chain included; x64 trials were " +
         "partially contended (3552->2509s CPU across the interleaved set, " +
-        "min carried) and pay the k-branch union deser term the " +
-        "dedup_minhash_pairs__x8_64 StageCpu run quantified (~k^2 harness " +
-        "cost, not operator work)"),
-    "dedup_cosine_pairs__x8_64" ->
-      ("x8/x64 = 12.91 vs linear 8.0 bound 16.0 under the same k-branch " +
-        "union deser term the minhash row's StageCpu run quantifies; the " +
-        "x64 trials were partially contended (2913->1913s monotone " +
-        "cooldown), min-of-trials carried"),
-    "dedup_minhash_pairs" ->
-      ("StageCpu 8/32 (r14): stage CPU 16.3->70.0s = 4.29 vs linear 4.0 — the " +
-        "plan's work is linear; the former 7.02 process-CPU ratio was task " +
-        "deserialization (6.5->87.8s, ~3000 tasks x k-branch union plan, a " +
-        "probe-fixture term) + 44KB reduce partitions, now run at the " +
-        "bytes-regime partition rule like the other tiny-row shuffles"),
+        "min carried)"),
     "events_sessions" ->
       ("StageCpu 8/32 at the bytes regime (r14): stage CPU 4.4->18.2s = 4.14 " +
         "vs linear 4.0, map stage 3.28, window stage 3.8 — plan work linear; " +
@@ -244,55 +221,37 @@ object ScaleProbe {
         "the only regime where the correlated sample's both-exchanges-cut-xp " +
         "claim executes; the exchange byte ratio vs the exact plan is pinned " +
         "by JoinSampledSpec, this row pins linear CPU of the sort-merge plan"),
-    "docs_split_incremental" ->
-      ("StageCpu 8/32 (r15): stage CPU 55.9->198.5s = 3.55 vs linear 4.0, " +
-        "non-deser stage CPU 38.7->55.1s = 1.42 — plan work sub-linear; the " +
-        "process-CPU 4.41 excess is task deserialization (17.2->143.4s, the " +
-        "k-branch union fixture term, the dedup_minhash_pairs signature) " +
-        "plus driver-side planning of the doubled CC loop (56->113s)"),
     "graph_triangles" ->
       ("runs under familyConf (broadcast off + preferSortMergeJoin=false) so " +
         "both factors execute the 100TB closure shape — unforced, x8 " +
         "broadcasts the 4.6MB edge side while x32 goes sort-merge and the " +
         "cross-plan ratio read 7.87. StageCpu pinned per-WEDGE cost constant " +
         "(wedge gen 0.48us at x8 vs 0.47us at x32 — the algorithmic core " +
-        "linear in W); after checkpointing the probe fixture's base edge " +
-        "derivation (review r15: k union branches re-ran the parse inside " +
-        "the timed window) same-head readings span 2.83-4.26 vs linear " +
+        "linear in W); same-head readings span 2.83-4.26 vs linear " +
         "4.0 — the r15 contended-window spread on min-of-trials, with the " +
         "stage-level per-wedge constant as the plan-linearity evidence"))
 
-  /** ×k documents: union of copies with shifted doc_ids and a per-copy
-    * suffix appended to EVERY token, so copies share no vocabulary at any
-    * k. (A 26-letter rotation cipher was tried first: at k > 26 the
-    * rotations wrap and copy i duplicates copy i−26 byte-for-byte, which
-    * doubled posting-list df and showed up as a 9.8× jump on the ×8→×32
-    * step of `dedup_ngram_pairs` — a fixture artifact, not engine
-    * behavior.)
-    */
-  /** Guard for every ×k id-shift helper (ADVICE r15): the "k disjoint
-    * copies" premise holds only while every BASE id sits below the
-    * per-copy shift block — a fixture regeneration whose ids reach
-    * [[DedupCorpus.IdBlock]] would overlap blocks and silently distort
-    * the scaling verdict. One-row agg over the (small) base frame,
-    * MEMOIZED per helper per process (review r16): the helpers are
-    * invoked lazily inside the probe's timed window (runAt takes the
-    * plan by name — the r12 discipline), so an every-call scan would add
-    * a constant base-fixture pass to both factors and deflate the ratio
-    * toward linear_ok; with the memo only the untimed warmup trial pays
-    * it. The memo keys on (helper, input-plan semantic hash) — not the
-    * helper name alone — so a multi-fixture JVM (a test process probing
-    * several datasets) re-checks each distinct base frame instead of
-    * letting the first fixture's pass suppress the guard for the rest
-    * (ADVICE r16).
+  /** Guard of every ×k fixture (ADVICE r15): the "k disjoint copies"
+    * premise holds only while every BASE id sits below the per-copy shift
+    * block — a fixture regeneration whose ids reach the block would
+    * overlap copies and silently distort the scaling verdict. One-row agg
+    * over the (small) base frame, MEMOIZED per fixture per process (review
+    * r16): fixtures are built lazily inside the probe's timed window
+    * (runAt takes the plan by name — the r12 discipline), so an every-call
+    * scan would add a constant base-fixture pass to both factors and
+    * deflate the ratio toward linear_ok; with the memo only the untimed
+    * warmup trial pays it. The memo keys on (fixture, input-plan semantic
+    * hash) — not the fixture name alone — so a multi-fixture JVM (a test
+    * process probing several datasets) re-checks each distinct base frame
+    * instead of letting the first fixture's pass suppress the guard for
+    * the rest (ADVICE r16).
     */
   private val idGuardPassed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def requireIdsBelowBlock(
-      base: DataFrame, idCol: org.apache.spark.sql.Column, block: Long,
-      what: String): Unit = {
+      base: DataFrame, idCol: Column, block: Long, what: String): Unit = {
     val memoKey = s"$what:${base.queryExecution.analyzed.semanticHash()}"
     if (idGuardPassed.contains(memoKey)) return
-    val row = base.agg(max(idCol)).head
+    val row = base.agg(max(idCol)).head()
     // empty base (max = NULL): no ids, trivially collision-free
     if (!row.isNullAt(0)) {
       val mx = row.getLong(0)
@@ -303,38 +262,93 @@ object ScaleProbe {
     idGuardPassed.add(memoKey)
   }
 
-  def explodeDocs(docs: DataFrame, k: Int, carry: Seq[String] = Nil): DataFrame = {
-    requireIdsBelowBlock(docs, col("doc_id"), DedupCorpus.IdBlock, "explodeDocs")
-    (0 until k).map { i =>
-      docs.select(
-        Seq((col("doc_id") + lit(i.toLong * DedupCorpus.IdBlock)).as("doc_id")) ++
-          carry.map(col) :+
-          // (?i): uppercase token runs must get the per-copy suffix too —
-          // Hashing.words lowercases before tokenizing, so an unsuffixed
-          // "Word" would be shared vocabulary across all copies (ADVICE r8)
-          (if (i == 0) col("text")
-           else regexp_replace(col("text"), s"(?i)([a-z0-9]+)", s"$$1q$i")).as("text"): _*)
-    }.reduce(_ unionAll _).repartition(32 * k)
+  private val CopyIndex = "probe_copy_index"
+
+  /** The ONE ×k fixture primitive: `k` copies of `base` as a single plan
+    * branch. Each base row is tagged with its copy index `i` in [0, k)
+    * by `explode(sequence(0, k-1))`, the tagged rows are repartitioned to
+    * `parts`, and `project(i)` builds copy i's columns with column-valued
+    * per-copy transforms. One branch keeps every task's plan the same size
+    * at every factor (a k-branch union made each of the fixture's tasks
+    * deserialize k branches, a harness term growing ~k²), and the
+    * transforms run in the `parts`-wide stage rather than in the few
+    * base-scan tasks. `guardId` over the base must stay below `block`
+    * ([[requireIdsBelowBlock]], reported as `what`).
+    */
+  private def copies(base: DataFrame, k: Int, parts: Int, guardId: Column, block: Long, what: String)(
+      project: Column => Seq[Column]): DataFrame = {
+    requireIdsBelowBlock(base, guardId, block, what)
+    base.withColumn(CopyIndex, explode(sequence(lit(0), lit(k - 1))))
+      .repartition(parts)
+      .select(project(col(CopyIndex)): _*)
   }
 
-  /** ×k events: union of copies with shifted user/event ids. `parts`
-    * overrides the default 32·k fixture partitioning for families under
-    * the [[tinyRowParts]] regime (must then match the shuffle-partition
-    * rule so map- and reduce-side counts stay in the same bytes regime).
+  /** Column `c` moved into copy `i`'s id block: `c + i·block`. */
+  private def shifted(c: String, i: Column, block: Long): Column =
+    (col(c) + i.cast("long") * block).as(c)
+
+  /** ×k documents: doc_ids shifted by i·[[DedupCorpus.IdBlock]] and a
+    * per-copy suffix `q<i>` appended to EVERY token of copy i > 0, so
+    * copies share no vocabulary at any k. (A 26-letter rotation cipher was
+    * tried first: at k > 26 the rotations wrap and copy i duplicates copy
+    * i−26 byte-for-byte, which doubled posting-list df and showed up as a
+    * 9.8× jump on the ×8→×32 step of `dedup_ngram_pairs` — a fixture
+    * artifact, not engine behavior.) `carry` columns pass through.
     */
-  def explodeEvents(events: DataFrame, k: Int, parts: Int = -1): DataFrame = {
-    // two blocks, one agg: user_id shifts by i·10⁸, event_id by i·10⁹ —
+  def explodeDocs(docs: DataFrame, k: Int, carry: Seq[String] = Nil): DataFrame =
+    copies(docs, k, 32 * k, col("doc_id"), DedupCorpus.IdBlock, "explodeDocs") { i =>
+      shifted("doc_id", i, DedupCorpus.IdBlock) +: carry.map(col) :+
+        // (?i): uppercase token runs must get the per-copy suffix too —
+        // Hashing.words lowercases before tokenizing, so an unsuffixed
+        // "Word" would be shared vocabulary across all copies (ADVICE r8)
+        when(i === 0, col("text")).otherwise(
+          regexp_replace(col("text"), lit("(?i)([a-z0-9]+)"), concat(lit("$1q"), i.cast("string"))))
+          .as("text")
+    }
+
+  /** ×k narrow-column documents (doc_id + `carry`, NO text): for families
+    * that read only metadata columns, [[explodeDocs]]' per-copy token
+    * rewrite would add fixture CPU unrelated to the plan under test.
+    * Shifted ids give every copy independent hash draws.
+    */
+  def explodeDocsNarrow(docs: DataFrame, k: Int, parts: Int, carry: Seq[String]): DataFrame =
+    copies(docs, k, parts, col("doc_id"), DedupCorpus.IdBlock, "explodeDocsNarrow") { i =>
+      shifted("doc_id", i, DedupCorpus.IdBlock) +: carry.map(col)
+    }
+
+  /** ×k events: user_id shifted by i·10⁸ and event_id by i·10⁹ → k× users
+    * at the same per-user event density. `parts` follows the family's
+    * [[partsFor]] rule (map- and reduce-side counts in the same regime).
+    */
+  def explodeEvents(events: DataFrame, k: Int, parts: Int): DataFrame =
     // greatest(user_id, event_id div 10) < 10⁸ ⟺ both ids under their
-    // own block (review r16: the docs helpers were guarded, these not)
-    requireIdsBelowBlock(
-      events, greatest(col("user_id"), expr("event_id div 10")),
-      DedupCorpus.IdBlock, "explodeEvents")
-    (0 until k).map { i =>
-      events
-        .withColumn("user_id", col("user_id") + lit(i.toLong * 100000000L))
-        .withColumn("event_id", col("event_id") + lit(i.toLong * 1000000000L))
-    }.reduce(_ unionAll _).repartition(if (parts > 0) parts else 32 * k)
-  }
+    // own block: one guard agg for two blocks
+    copies(events, k, parts, greatest(col("user_id"), expr("event_id div 10")),
+      DedupCorpus.IdBlock, "explodeEvents") { i =>
+      events.columns.toSeq.map {
+        case "user_id" => shifted("user_id", i, 100000000L)
+        case "event_id" => shifted("event_id", i, 1000000000L)
+        case c => col(c)
+      }
+    }
+
+  /** ×k orders+lineitem with the SAME per-copy orderkey shift (i·10⁹) on
+    * both sides, so each copy carries the fixture's intact join structure
+    * — kept keys per copy are an independent ~p draw (the md5 of a shifted
+    * key is unrelated to the original's), which is exactly what k× more
+    * real orders look like to the correlated sampler. Column-pruned to
+    * the probe query's needs.
+    */
+  def explodeOrders(orders: DataFrame, k: Int, parts: Int): DataFrame =
+    copies(orders, k, parts, col("o_orderkey"), 1000000000L, "explodeOrders") { i =>
+      Seq(shifted("o_orderkey", i, 1000000000L), col("o_orderdate"))
+    }
+
+  /** Lineitem side of [[explodeOrders]] — the identical key shift. */
+  def explodeLineitem(lineitem: DataFrame, k: Int, parts: Int): DataFrame =
+    copies(lineitem, k, parts, col("l_orderkey"), 1000000000L, "explodeLineitem") { i =>
+      Seq(shifted("l_orderkey", i, 1000000000L), col("l_extendedprice"), col("l_discount"))
+    }
 
   /** Fixture embedding dimensionality. [[explodeEmbeddings]]' per-copy
     * rotations are distinct only below this; the require makes the
@@ -342,13 +356,42 @@ object ScaleProbe {
     */
   val EmbeddingDims = 64
 
-  /** ×k embeddings: shifted vec_ids; copy i circularly rotates the vector
-    * by i dims (norm-preserving, but a different sign pattern against the
-    * LSH hyperplanes) so copies spread across buckets instead of piling
-    * onto copy 0's positions — probe factors must stay below the
+  /** ×k embeddings: vec_ids shifted by i·10⁸; copy i circularly rotates
+    * the vector by i dims (norm-preserving, but a different sign pattern
+    * against the LSH hyperplanes) so copies spread across buckets instead
+    * of piling onto copy 0's positions — probe factors must stay below the
     * [[EmbeddingDims]] dims so every copy gets a distinct rotation (at
     * k > dims the wrap silently re-collides copies, a fixture artifact).
     */
+  def explodeEmbeddings(emb: DataFrame, k: Int): DataFrame = {
+    require(k <= EmbeddingDims,
+      s"explodeEmbeddings: k=$k exceeds the $EmbeddingDims-dim fixture — " +
+        "rotations would wrap and collide copies (fixture artifact, not engine behavior)")
+    copies(emb, k, 32 * k, col("vec_id"), DedupCorpus.IdBlock, "explodeEmbeddings") { i =>
+      Seq(shifted("vec_id", i, 100000000L), col("label"),
+        // copy 0: slice(e, 1, 0) is empty, so the concat is e itself
+        concat(slice(col("embedding"), i + 1, lit(1 << 20)), slice(col("embedding"), lit(1), i))
+          .as("embedding"))
+    }
+  }
+
+  /** ×k canonical edge set of the triangle census: BOTH endpoints shift
+    * by i·[[DedupCorpus.IdBlock]] (the statsFromUndirected seam), so the
+    * k× graph is k disjoint copies of the base structure: edges, wedges
+    * and triangles all scale exactly k× and the oriented out-degree bound
+    * stays block-local. (Shifting only user ids, as explodeEvents does,
+    * would leave props.k nodes shared across copies — k×-degree hubs, a
+    * different graph.) The base is the declared query's own
+    * canonical-edge derivation, and the guard reads the DERIVED endpoints:
+    * node ids include props.k-derived synthetic ids, not just user_ids
+    * (ADVICE r15).
+    */
+  def explodeEdges(events: DataFrame, k: Int): DataFrame =
+    copies(graft.graphs.Triangles.canonicalEdges(events), k, partsFor("graph_triangles", k),
+      greatest(col("a"), col("b")), DedupCorpus.IdBlock, "explodeEdges") { i =>
+      Seq(shifted("a", i, DedupCorpus.IdBlock), shifted("b", i, DedupCorpus.IdBlock))
+    }
+
   /** Power-law pair graph over an exploded corpus (VERDICT r12 §next 4):
     * every probe fixture so far replicates dup structure EVENLY per copy,
     * so the CC families never see a skewed label — this builds the shape
@@ -381,29 +424,6 @@ object ScaleProbe {
     megaSpokes.unionAll(smallPairs)
   }
 
-  /** ×k orders+lineitem with the SAME per-copy orderkey shift on both
-    * sides, so each copy carries the fixture's intact join structure —
-    * kept keys per copy are an independent ~p draw (the md5 of a shifted
-    * key is unrelated to the original's), which is exactly what k× more
-    * real orders look like to the correlated sampler. Column-pruned to
-    * the probe query's needs; repartitioned at the caller's tiny-row
-    * partition rule.
-    */
-  def explodeOrders(orders: DataFrame, k: Int, parts: Int): DataFrame =
-    (0 until k).map { i =>
-      orders.select(
-        (col("o_orderkey") + lit(i.toLong * 1000000000L)).as("o_orderkey"),
-        col("o_orderdate"))
-    }.reduce(_ unionAll _).repartition(parts)
-
-  /** Lineitem side of [[explodeOrders]] — the identical key shift. */
-  def explodeLineitem(lineitem: DataFrame, k: Int, parts: Int): DataFrame =
-    (0 until k).map { i =>
-      lineitem.select(
-        (col("l_orderkey") + lit(i.toLong * 1000000000L)).as("l_orderkey"),
-        col("l_extendedprice"), col("l_discount"))
-    }.reduce(_ unionAll _).repartition(parts)
-
   /** "Is an original base-snapshot doc" over an EXPLODED augmented corpus
     * — the IncrementalDedup base/delta rule made shift-aware, shared by
     * the dedup_incremental and docs_split_incremental probe entries:
@@ -412,71 +432,9 @@ object ScaleProbe {
     * below that); the block shift is ≡ 0 mod DeltaMod, so the %4 split
     * replicates per block.
     */
-  def isBaseSnapshot: org.apache.spark.sql.Column =
+  def isBaseSnapshot: Column =
     (col("doc_id") % DedupCorpus.IdBlock) < DedupCorpus.ExactDupOffset &&
       col("doc_id") % graft.dedup.IncrementalDedup.DeltaMod =!= 0
-
-  /** The triangle-census probe pipeline at factor k. BOTH endpoints
-    * shift per block (the statsFromUndirected seam), so the k× graph is
-    * k disjoint copies of the base structure: edges, wedges, and
-    * triangles all scale exactly k× and the oriented out-degree bound
-    * stays block-local. (Shifting only user ids, as explodeEvents does,
-    * would leave props.k nodes shared across copies — k×-degree hubs, a
-    * different graph.)
-    */
-  def trianglesAt(events0: DataFrame, k: Int): DataFrame = {
-    // checkpoint the base derivation: k union branches would otherwise
-    // each re-run the parse+distinct pipeline inside the timed window
-    // (review r15) — and the one shared canonical-edge spelling keeps
-    // the probe on the declared query's exact derivation
-    val base = graft.graphs.Triangles.canonicalEdges(events0)
-      .localCheckpoint(false)
-    // node ids include props.k-derived synthetic ids, not just user_ids —
-    // the block-disjointness premise must be checked on the DERIVED edge
-    // endpoints, not the raw event columns (ADVICE r15)
-    requireIdsBelowBlock(
-      base, greatest(col("a"), col("b")), DedupCorpus.IdBlock, "trianglesAt")
-    graft.graphs.Triangles.statsFromUndirected(
-      (0 until k).map { i =>
-        base.select(
-          (col("a") + lit(i.toLong * DedupCorpus.IdBlock)).as("a"),
-          (col("b") + lit(i.toLong * DedupCorpus.IdBlock)).as("b"))
-      }.reduce(_ unionAll _)
-        .repartition(partsFor("graph_triangles", k)))
-  }
-
-  /** ×k narrow-column documents (doc_id + `carry`, NO text): for families
-    * that read only metadata columns, [[explodeDocs]]' per-copy token
-    * rewrite would add fixture CPU unrelated to the plan under test.
-    * Shifted ids give every copy independent hash draws.
-    */
-  def explodeDocsNarrow(
-      docs: DataFrame, k: Int, parts: Int, carry: Seq[String]): DataFrame = {
-    requireIdsBelowBlock(
-      docs, col("doc_id"), DedupCorpus.IdBlock, "explodeDocsNarrow")
-    (0 until k).map { i =>
-      docs.select(
-        (col("doc_id") + lit(i.toLong * DedupCorpus.IdBlock)).as("doc_id") +:
-          carry.map(col): _*)
-    }.reduce(_ unionAll _).repartition(parts)
-  }
-
-  def explodeEmbeddings(emb: DataFrame, k: Int): DataFrame = {
-    requireIdsBelowBlock(
-      emb, col("vec_id"), DedupCorpus.IdBlock, "explodeEmbeddings")
-    require(k <= EmbeddingDims,
-      s"explodeEmbeddings: k=$k exceeds the $EmbeddingDims-dim fixture — " +
-        "rotations would wrap and collide copies (fixture artifact, not engine behavior)")
-    (0 until k).map { i =>
-      emb.select(
-        (col("vec_id") + lit(i.toLong * 100000000L)).as("vec_id"),
-        col("label"),
-        (if (i == 0) col("embedding")
-         else concat(
-           slice(col("embedding"), i + 1, 1 << 20),
-           slice(col("embedding"), 1, i))).as("embedding"))
-    }.reduce(_ unionAll _).repartition(32 * k)
-  }
 
   /** The base fixtures the probe families explode, read from one sf dir
     * (lazily: a restricted run reads only the tables its families use).
@@ -773,14 +731,10 @@ object ScaleProbe {
           Tables.documents(f.spark, f.sfDir), k,
           partsFor("docs_weighted_sample", k),
           carry = Seq("source", "n_chars")))),
-    // r15 continuation: the triangle census — BOTH endpoints shift per
-    // block (the statsFromUndirected seam), so the k× graph is k
-    // disjoint copies of the base structure: edges, wedges, and
-    // triangles all scale exactly k× and the oriented out-degree bound
-    // stays block-local. (Shifting only user ids, as explodeEvents
-    // does, would leave props.k nodes shared across copies — k×-degree
-    // hubs, a different graph.)
-    "graph_triangles" -> ((f, k) => trianglesAt(f.events0, k)),
+    // r15 continuation: the triangle census over k disjoint copies of
+    // the base graph ([[explodeEdges]])
+    "graph_triangles" -> ((f, k) =>
+      graft.graphs.Triangles.statsFromUndirected(explodeEdges(f.events0, k))),
     // r17 additions: the posting-index construction + pruned conjunctive
     // search (tokenize → posexplode → two partial-agg'd aggregates with
     // a per-doc-bounded positions collect; the search side touches only
@@ -839,8 +793,7 @@ object ScaleProbe {
     require(factors.size >= 2,
       s"need at least two scale factors to compute a scaling ratio, got: ${factors.mkString(",")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.GraftSession.builder("local[32]", "32")
-      .getOrCreate()
+    val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val fx = new Fixtures(spark, sfDir)
