@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * Everything here must be replicable in ANSI-ish SQL so the DuckDB oracle
   * can recompute it: hashes are md5-prefix based (both engines agree on md5
   * of UTF-8 text), not Spark-internal murmur/xxhash (engine-specific).
-  * All expressions are codegen'd built-ins — no UDFs in any hot path.
+  * Every expression is codegen'd — built-ins, or the engine's native
+  * kernels ([[graft.functions.Hash60]], [[graft.functions.WordShingles]]) —
+  * with no UDF in any hot path.
   */
 object Hashing {
 
@@ -17,18 +19,20 @@ object Hashing {
     * md5, read as a base-16 number. DuckDB equivalent:
     * `CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)`.
     * 60 bits keeps it positive in a signed 64-bit long in both engines.
+    *
+    * Backed by the codegen'd [[graft.functions.Hash60]] kernel, which reads
+    * the top 60 bits off the digest; the built-in spelling
+    * `conv(substring(md5(c), 1, 15), 16, 10).cast("long")` computes the
+    * same value through a hex string per row.
     */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+  def hash60(c: Column): Column = graft.functions.Hash60.hash60(c)
 
   /** Driver-side twin of the Column [[hash60]], bit-identical to it: the
-    * first 15 hex digits of md5 are the top 60 bits of the digest's first
-    * 8 bytes.
+    * same top-60 helper over the UTF-8 bytes' digest.
     */
   def hash60(s: String): Long =
-    java.nio.ByteBuffer.wrap(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))).getLong >>> 4
+    graft.functions.Hash60.ofBytes(graft.functions.Hash60.digest.get,
+      s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** SQL text of [[hash60]] for DuckDB oracle generation. */
   def hash60Sql(expr: String): String =

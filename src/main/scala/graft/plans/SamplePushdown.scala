@@ -53,13 +53,16 @@ object SamplePushdown extends Rule[LogicalPlan] {
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
-  * Installs the engine's optimizer rules AND its native SQL functions
-  * (`dot_product_q`, `sorted_intersect_count`), so plain-SQL users of the
-  * session get them too.
+  * Installs the engine's optimizer rules ([[SamplePushdown]],
+  * [[HashLast]]) AND its native SQL functions (`hash60`, `dot_product_q`,
+  * `sorted_intersect_count`, …), so plain-SQL users of the session get
+  * them too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
     extensions.injectOptimizerRule(_ => SamplePushdown)
+    extensions.injectOptimizerRule(_ => HashLast)
+    extensions.injectFunction(graft.functions.Hash60.descriptor)
     extensions.injectFunction(graft.functions.DotProductQ.descriptor)
     extensions.injectFunction(graft.functions.SortedIntersectCount.descriptor)
     extensions.injectFunction(graft.functions.CountInSet.descriptor)

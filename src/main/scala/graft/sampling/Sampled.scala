@@ -84,9 +84,9 @@ object SamplingReport {
   *
   * Choosing between this and [[UniverseSampled]]: this seeded Bernoulli
   * filter is the CHEAPEST per row (one RNG draw, no hashing) — prefer it
-  * for scan-bound single-aggregate shapes (TPC-H Q6 measured 0.21 s seeded
-  * vs 0.76 s universe vs 0.23 s exact at sf0.1), where the universe
-  * sampler's per-row md5 costs more than the sample saves. Prefer
+  * for scan-bound single-aggregate shapes like TPC-H Q6, where the
+  * universe sampler still hashes every row that passes the query's own
+  * predicates and the sample has little downstream work to save. Prefer
   * [[UniverseSampled]] when per-row downstream work dominates, or when you
   * need its extras: external replayability (oracle-provable keep-set),
   * unit atomicity (whole clusters/orders kept together), and stability

@@ -28,28 +28,40 @@ import graft.dedup.Hashing
   *     samples by content hash and Quickr samples join inputs by key.
   *
   * Scale shape: identical to the Bernoulli path — the predicate is a
-  * codegen'd scan-stage filter (md5 of a short key string per row), so
-  * 1−p of a 100 TB corpus never leaves the scan loop, and Catalyst prunes
-  * columns below it. Horvitz–Thompson scale-up is the same ×(1/p); the
-  * trade-off vs `rand(seed)` is paying one md5 per row for determinism.
+  * codegen'd scan-stage filter (the native [[graft.functions.Hash60]]
+  * kernel: one md5 of a short key string per row it reaches), so 1−p of
+  * a 100 TB corpus never leaves the scan loop, and Catalyst prunes
+  * columns below it. [[graft.plans.HashLast]] evaluates the hash after
+  * the query's own cheap comparisons in the same filter, so rows those
+  * comparisons reject are never hashed. Horvitz–Thompson scale-up is the
+  * same ×(1/p); the trade-off vs `rand(seed)` is paying one md5 per
+  * surviving row for determinism.
   *
   * The unit hash is salted (`"u:"`) so this sampling decision is
   * independent of every other hash60 use of the same column (MinHash
   * seeds, token-budget ordering, DedupRate's content ranges).
   *
   * ==Which sampler should I use?==
-  * Decision rule (measured, BASELINE.md r9 ledger): when per-row
-  * DOWNSTREAM work dominates — tokenize/explode/regex/join after the
-  * sample — the universe (`_u10`) family wins AND is oracle-proven
-  * (wordcount 0.67 vs 0.77 s exact, text_quality 0.35 vs 0.97,
-  * text_tokens 0.23 vs 0.72 at sf0.1). When the query is SCAN-BOUND with
-  * a single pushed-down aggregate (TPC-H Q6 shape), the md5 keep-predicate
-  * cannot skip I/O and adds one hash per row, so it costs more than it
-  * saves (q6 `_u10` 0.76 s vs 0.23 s exact): use the seeded Bernoulli
-  * [[Sampled]] `_r10` twin there (0.21 s) — its `rand(seed)` filter is
-  * nearly free per row. Universe sampling's extra properties (exact
-  * replayability, unit atomicity, retry/re-split determinism) are what
-  * you pay that hash for; pick by whether the shape amortizes it.
+  * Decision rule (measured with `graft.tools.Profile`, sf0.1, 4 cores,
+  * two runs per side; PROFILE_HASH60.md): with the native kernel and
+  * hash-last filters the universe (`_u10`) twin costs no more executor
+  * CPU than its exact query on the scan-bound TPC-H shapes, and less
+  * wall where its sample thins a downstream aggregate or join: q1 `_u10`
+  * 0.66–0.77 s wall and 0.30 s stage CPU vs 0.85–0.96 s and 0.39–0.45 s
+  * exact; q6 `_u10` 0.36–0.37 s and 0.12–0.13 s vs 0.25–0.35 s and
+  * 0.08–0.10 s exact (before the kernel: 0.94–0.96 s and 0.77–0.80 s);
+  * revenue-monthly `_u10` 0.84–0.86 s vs 0.99–1.28 s exact. On q6 the
+  * remaining gap is the hash of the ~2 % of rows that pass the query's
+  * own predicates plus the driver's fixed planning cost, so the seeded
+  * Bernoulli [[Sampled]] `_r10` twin — one RNG draw per row, no hash —
+  * is still the cheapest sampler there. When per-row DOWNSTREAM work
+  * dominates — tokenize/explode/regex/join after the sample — the
+  * universe family wins AND is oracle-proven (wordcount 0.67 vs 0.77 s
+  * exact, text_quality 0.35 vs 0.97, text_tokens 0.23 vs 0.72 at sf0.1,
+  * BASELINE.md r9 ledger, before the kernel). Pick Bernoulli for the
+  * lowest per-row cost; pick universe for its extra properties (exact
+  * replayability, unit atomicity, retry/re-split determinism), which now
+  * cost about one hash per row that survives the query's own filters.
   */
 object UniverseSampled {
 

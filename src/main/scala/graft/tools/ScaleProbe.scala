@@ -841,7 +841,10 @@ object ScaleProbe {
 
     val results = scala.collection.mutable.LinkedHashMap[String, Seq[(Int, (Double, Double, Double))]]()
     selected.foreach { name =>
-      probe(name, 1) // warmup: absorb codegen + first-touch scan
+      // untimed warm-ups: ×1 absorbs codegen and the first-touch scan, and
+      // one probe per verdict factor absorbs that factor's own first touch
+      // (a factor's first run reads ~2× its minimum)
+      (1 +: Seq(kLo, kHi)).distinct.foreach(k => probe(name, k))
       val trials = scala.collection.mutable.LinkedHashMap[Int, Vector[(Double, Double, Double)]]()
       factors.filterNot(k => k == kLo || k == kHi).foreach { k =>
         trials(k) = Vector(probe(name, k))

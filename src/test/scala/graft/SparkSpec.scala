@@ -21,6 +21,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assume(new java.io.File(dir).isDirectory,
       s"live testdata missing at $dir (set GRAFT_TESTDATA_ROOT) — skipping, NOT a pass")
 
+  /** Runs `body` with the session confs `kv` set, restoring each key's
+    * previous value (or unsetting it) afterwards. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** Every node of an executed plan, descending through AQE stage
     * boundaries: AdaptiveSparkPlanExec, QueryStageExec, and
     * ReusedExchangeExec hold their subplans outside `children`, so a plain

@@ -57,7 +57,7 @@ object CatalogSweep {
     * own tolerance — so aggregation-order ulps don't read as layout
     * sensitivity), sorted, digested.
     */
-  private def fingerprint(df: DataFrame): String = {
+  private[graft] def fingerprint(df: DataFrame): String = {
     val rows = df.collect().map { r =>
       (0 until r.length).map { i =>
         r.get(i) match {

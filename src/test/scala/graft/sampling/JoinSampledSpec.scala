@@ -210,7 +210,7 @@ class JoinSampledSpec extends SparkSpec {
     join.get.children.foreach { side =>
       // side.toString pretty-prints THROUGH nested stage boundaries, so a
       // keep-filter anywhere below this side is visible
-      assert(side.toString.contains("md5"),
+      assert(side.toString.contains("hash60"),
         s"keep-filter not below the join on side ${side.nodeName}:\n${side.toString.take(2000)}")
     }
   }
