@@ -14,18 +14,9 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB): candidate generation is a shuffle on
   * (band index, band key) — documents only ever meet inside a bucket, never
   * all-pairs. The signature table is ~17 longs/doc regardless of document
-  * size, so the self-join shuffles signatures, not text. Bucket skew (a
-  * degenerate band key shared by millions of boilerplate/identical docs,
-  * which would make that band's self-join quadratic) is bounded by an
-  * explicit bucket-size cap: buckets over `maxBucket` members don't
-  * self-join — they emit STAR candidates against the bucket's min-id
-  * representative instead (linear in bucket size; see [[nearDupPairs]]),
-  * so a near-dup mega-cluster stays connected for the downstream
-  * connected-components pass instead of silently losing every pair. The
-  * over-cap key set is tiny by construction, so both the exclusion and
-  * the star ride one broadcast, not a shuffle. The oracle SQL applies the
-  * identical cap + star, so semantics agree at every scale (at the test
-  * corpus the cap is a no-op).
+  * size, so the self-join shuffles signatures, not text. Bucket skew is
+  * bounded by the shared cap-and-star policy of [[BandedPairs]], which the
+  * oracle SQL applies identically.
   *
   * All hashes are md5-prefix based so the DuckDB oracle replays the exact
   * computation (see [[minhashOracle]]).
@@ -37,12 +28,9 @@ object MinHashLSH {
   val NumBands = 8 // → 2 rows per band
   val RowsPerBand: Int = NumHashes / NumBands
   val ShingleK = 3
-  /** Skew guard: band buckets with more members than this never SELF-join
-    * (a bucket of b docs costs b² in the join) — they fall back to O(b)
-    * star candidates via the bucket representative (see [[nearDupPairs]]).
-    * 64 bounds any single bucket's dense cost at 4096 comparisons while
-    * being far above bucket sizes banding math produces on non-degenerate
-    * corpora.
+  /** Bucket-size cap of [[BandedPairs]]: 64 bounds any single bucket's
+    * dense cost at 4096 comparisons while being far above bucket sizes
+    * banding math produces on non-degenerate corpora.
     */
   val MaxBucket = 64L
 
@@ -147,19 +135,9 @@ object MinHashLSH {
 
   /** Candidate near-duplicate pairs with the MinHash similarity estimate
     * (fraction of agreeing signature components), filtered at `minSim`.
-    * Pairs are found via band-bucket equality only — never all-pairs.
-    *
-    * Skew guard with recall fallback (r14): buckets larger than
-    * `maxBucket` do NOT self-join (a b-carrier bucket costs b² pair rows);
-    * instead each over-cap bucket emits STAR candidates — every member
-    * against the bucket's min-id representative, linear in bucket size.
-    * Dropping hot buckets outright (the pre-r14 behavior) silently
-    * deleted every pair of a near-dup MEGA-CLUSTER (>64 copies of
-    * templated text, routine at 100 TB), so connected components split
-    * exactly the clusters dedup exists to collapse; the star keeps such a
-    * cluster connected through its representative at O(b) cost while the
-    * similarity verification below still gates every emitted pair. (The
-    * incremental append path applies the same fallback adapted to its
+    * Pairs are found via band-bucket equality only — never all-pairs —
+    * under the [[BandedPairs]] skew cap, and scored after the cross-band
+    * `distinct`. (The incremental append path adapts the cap to its
     * two-sided join — delta members probe the hot bucket's base
     * representative; see [[IncrementalDedup.matchesFrom]].)
     */
@@ -191,30 +169,9 @@ object MinHashLSH {
     // identical to an inline explode while the band construction can't
     // drift between paths
     val banded = bandedSignatures(sigs).select("doc_id", "band", "key")
-    // over-cap bucket keys: one map-side-partial aggregate over the banded
-    // table; the surviving key set is tiny (degenerate keys only) → the
-    // exclusion is a broadcast anti-join, no extra shuffle of `banded`
-    val hot = banded
-      .groupBy("band", "key").agg(count(lit(1)).as("__bc"))
-      .filter(col("__bc") > maxBucket)
-      .select("band", "key")
-    val bounded = banded.join(broadcast(hot), Seq("band", "key"), "left_anti")
-    val densePairs = bounded.as("a")
-      .join(bounded.as("b"), Seq("band", "key"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    // star fallback inside over-cap buckets: member ↔ min-id representative
-    // only — O(b) rows per bucket, and rep < member by construction so the
-    // canonical (doc_a < doc_b) order is free. Both joins ride the SAME
-    // broadcast hot-key set; `banded` itself is never re-shuffled.
-    val hotMembers = banded.join(broadcast(hot), Seq("band", "key"))
-    val reps = hotMembers
-      .groupBy("band", "key").agg(min(col("doc_id")).as("rep"))
-    val starPairs = hotMembers
-      .join(broadcast(reps), Seq("band", "key"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-    val candidates = densePairs.unionAll(starPairs).distinct()
+    val candidates = BandedPairs(banded, "doc_id", Nil, maxBucket, directed = false)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+      .distinct()
     val matches = sigCols.map(m => when(col(s"sa.$m") === col(s"sb.$m"), 1).otherwise(0))
     candidates
       .join(sigs.as("sa"), col("doc_a") === col("sa.doc_id"))
@@ -259,9 +216,8 @@ object MinHashLSH {
     shinglesSql(DedupCorpus.augmentSql) +
       s"\nSELECT doc_id, ${sigCols.mkString(", ")} FROM sig ORDER BY doc_id"
 
-  /** Oracle SQL for [[nearDupPairs]] over the augmented dedup corpus —
-    * including the bucket-size cap AND the over-cap star fallback, so
-    * Spark and the oracle agree at every scale (no-op on the test corpus).
+  /** Oracle SQL for [[nearDupPairs]] over the augmented dedup corpus, with
+    * the [[BandedPairs.candidatesSql]] cap and star.
     */
   def nearDupPairsOracleSql(
       minSim: Double = 0.5,
@@ -284,21 +240,7 @@ object MinHashLSH {
          |bands0 AS (
          |  $bandKeys
          |),
-         |ok AS (SELECT band, key FROM bands0 GROUP BY 1, 2 HAVING count(*) <= $maxBucket),
-         |hotrep AS (SELECT band, key, min(doc_id) AS rep FROM bands0
-         |           GROUP BY 1, 2 HAVING count(*) > $maxBucket),
-         |bands AS (SELECT b.* FROM bands0 b JOIN ok USING (band, key)),
-         |cand AS (
-         |  SELECT DISTINCT doc_a, doc_b FROM (
-         |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |    FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-         |    WHERE a.doc_id < b.doc_id
-         |    UNION ALL
-         |    SELECT h.rep AS doc_a, m.doc_id AS doc_b
-         |    FROM bands0 m JOIN hotrep h USING (band, key)
-         |    WHERE m.doc_id <> h.rep
-         |  )
-         |)
+         |${BandedPairs.candidatesSql("doc_id", "doc_a", "doc_b", maxBucket, directed = false)}
          |SELECT doc_a, doc_b, CAST(($simExpr) AS DOUBLE) / $NumHashes AS sim
          |FROM cand
          |JOIN sig sa ON doc_a = sa.doc_id

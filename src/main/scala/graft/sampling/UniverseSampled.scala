@@ -92,16 +92,27 @@ object UniverseSampled {
   def residue(unit: Column): Column =
     Hashing.hash60(concat(lit(Salt), unit.cast("string"))) % RangeMod
 
+  /** `pct` itself, once it lies in [1, [[RangeMod]]]. Outside that range
+    * a sample is silently wrong: pct = 150 keeps every row while
+    * [[scale]] reports 0.667, and pct = 0 keeps none and scales by
+    * Infinity. Fail loudly at plan build instead.
+    */
+  private def checked(pct: Int): Int = {
+    require(pct >= 1 && pct <= RangeMod,
+      s"universe sample pct must be in [1, $RangeMod] (got $pct)")
+    pct
+  }
+
   /** Keep-predicate: hash of the salted unit in [0, pct). */
   def keep(unit: Column, pct: Int): Column =
-    residue(unit) < pct
+    residue(unit) < checked(pct)
 
   /** DuckDB text of [[keep]] for oracle generation; `unitExpr` is a SQL
     * expression for the unit column (cast to VARCHAR here, mirroring the
     * Spark-side string cast).
     */
   def keepSql(unitExpr: String, pct: Int): String =
-    s"${Hashing.hash60Sql(s"'$Salt' || CAST($unitExpr AS VARCHAR)")} % $RangeMod < $pct"
+    s"${Hashing.hash60Sql(s"'$Salt' || CAST($unitExpr AS VARCHAR)")} % $RangeMod < ${checked(pct)}"
 
   /** The `pct`-percent universe sample of `df` by `unit`. */
   def sample(df: DataFrame, unit: Column, pct: Int): DataFrame =
@@ -110,7 +121,7 @@ object UniverseSampled {
   /** Horvitz–Thompson scale factor 1/p (exact in IEEE 754 for the divisors
     * of 100 used here).
     */
-  def scale(pct: Int): Double = RangeMod.toDouble / pct
+  def scale(pct: Int): Double = RangeMod.toDouble / checked(pct)
 
   /** SQL literal of [[scale]] — e.g. "10.0", so `count(*) * 10.0` is a
     * DOUBLE in DuckDB exactly like Spark's `cnt * lit(10.0)`.

@@ -72,24 +72,19 @@ object KnnGraph {
 
   /** Directed candidate edges (query_id, q_label, neighbor_id, n_label,
     * sim): both orientations of every in-bucket meeting, deduped across
-    * bands.
-    *
-    * Skew guard ([[SimilaritySearch.MaxBucket]]): a bucket of
-    * sign-identical vectors defeats the derived plane budget (identical
-    * signs at ANY width), and its in-bucket self-join is quadratic.
-    * Over-cap buckets emit STAR candidates instead — each member gains the
-    * bucket's min-id representative as a candidate and vice versa, linear
-    * in bucket size. Mega-bucket members keep ≥1 (typically near-identical)
-    * neighbor; the lost in-bucket recall is the honest-ANN contract the
-    * operator already documents, and the oracle mirrors the fallback.
+    * bands, under the [[graft.dedup.BandedPairs]] skew cap
+    * ([[SimilaritySearch.MaxBucket]]). A member of an over-cap bucket
+    * keeps at least the bucket's representative as a (typically
+    * near-identical) neighbor; the lost in-bucket recall is the
+    * honest-ANN contract the operator already documents.
     */
   private def candidates(
       embeddings: DataFrame, numBands: Int, numPlanes: Option[Int],
       maxBucket: Long = SimilaritySearch.MaxBucket): DataFrame = {
     val planes = numPlanes.getOrElse(PlaneBudget.bandBitsFor(embeddings) * numBands)
     val base = bandedBase(embeddings, planes, numBands)
-    // the shared machinery ([[SimilaritySearch.bandedCandidates]]) in its
-    // DIRECTED form, with the label riding as a carry column
+    // the shared scored candidates in their DIRECTED form, with the label
+    // riding as a carry column
     SimilaritySearch
       .bandedCandidates(base, Seq("label"), directed = true, numBands, maxBucket)
       .select(
@@ -171,26 +166,7 @@ object KnnGraph {
   private def bandsSql(
       numBands: Int, maxBucket: Long = SimilaritySearch.MaxBucket): String =
     s"""${PlaneBudget.dynamicBandsSql(numBands, withLabel = true)},
-       |ok AS (SELECT band, key FROM bands GROUP BY 1, 2
-       |       HAVING count(*) <= $maxBucket),
-       |hotrep AS (SELECT band, key, min(vec_id) AS rep FROM bands
-       |           GROUP BY 1, 2 HAVING count(*) > $maxBucket),
-       |bok AS (SELECT b.* FROM bands b JOIN ok USING (band, key)),
-       |cand AS (
-       |  SELECT DISTINCT query_id, neighbor_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id
-       |    FROM bok a JOIN bok b ON a.band = b.band AND a.key = b.key
-       |    WHERE a.vec_id <> b.vec_id
-       |    UNION ALL
-       |    SELECT m.vec_id AS query_id, h.rep AS neighbor_id
-       |    FROM bands m JOIN hotrep h USING (band, key)
-       |    WHERE m.vec_id <> h.rep
-       |    UNION ALL
-       |    SELECT h.rep AS query_id, m.vec_id AS neighbor_id
-       |    FROM bands m JOIN hotrep h USING (band, key)
-       |    WHERE m.vec_id <> h.rep
-       |  )
-       |),
+       |${SimilaritySearch.candSql("query_id", "neighbor_id", maxBucket, directed = true)},
        |sims AS (
        |  SELECT query_id, pa.label AS q_label, neighbor_id, pb.label AS n_label,
        |         ${SimilaritySearch.dotSql("pa.qv", "pb.qv")} / (pa.nrm * pb.nrm) AS sim

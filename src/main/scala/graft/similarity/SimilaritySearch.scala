@@ -34,20 +34,13 @@ object SimilaritySearch {
   val NumQueries = 5
   val TopK = 10
 
-  /** Bucket-size skew cap for the banded PAIR paths ([[nearDupPairs]],
-    * [[KnnGraph]]) — the [[graft.dedup.MinHashLSH.MaxBucket]] discipline
-    * adapted to sign-LSH. The derived plane budget holds EXPECTED occupancy
-    * at [[PlaneBudget.TargetBucket]], but no plane count can split a bucket
-    * of IDENTICAL (or sign-identical) vectors — constant boilerplate
-    * embeddings, zero-information documents — so one degenerate cluster
-    * still makes the in-bucket self-join quadratic at corpus scale. Buckets
-    * above the cap fall back to STAR candidates against the bucket's min-id
-    * representative (linear in bucket size; verification below still gates
-    * every emitted pair). 8× the occupancy target: a Poisson-distributed
-    * bucket at mean 64 never reaches 512, so the fallback only ever fires
-    * on genuinely degenerate sign-clusters, never on statistical
-    * fluctuation — and it is a no-op on every test fixture, pinned instead
-    * by the over-cap specs.
+  /** [[graft.dedup.BandedPairs]] bucket-size cap for the banded PAIR
+    * paths ([[nearDupPairs]], [[KnnGraph]]). The derived plane budget holds
+    * EXPECTED occupancy at [[PlaneBudget.TargetBucket]], but no plane count
+    * can split a bucket of sign-identical vectors. 8× the occupancy
+    * target: a Poisson-distributed bucket at mean 64 never reaches 512, so
+    * the star fallback only ever fires on genuinely degenerate
+    * sign-clusters, never on statistical fluctuation.
     */
   val MaxBucket = 8L * PlaneBudget.TargetBucket
 
@@ -169,10 +162,8 @@ object SimilaritySearch {
     * retained through the OR over bands. The defaults (4 planes, 1 band)
     * reproduce the oracle-pinned reference configuration; the candidate-
     * growth behavior is pinned by SimilaritySearchSpec on a 16-plane
-    * config. Buckets over [[MaxBucket]] (sign-identical degenerate
-    * clusters no plane budget can split) fall back to star candidates
-    * against the bucket's min-id representative — linear in bucket size,
-    * mirrored in both oracles.
+    * config. Candidates follow the [[graft.dedup.BandedPairs]] skew cap
+    * ([[MaxBucket]]).
     */
   def nearDupPairs(
       embeddings: DataFrame,
@@ -208,26 +199,15 @@ object SimilaritySearch {
       .filter(col("sim") >= minSim)
   }
 
-  /** The banded candidate machinery shared by BOTH self-join operators —
-    * [[nearDupPairs]] (undirected) and [[KnnGraph]] (directed): band
-    * explode → over-cap key exclusion (one map-side-partial aggregate
-    * whose surviving key set is tiny, so exclusion is a broadcast
-    * anti-join and the banded frame is never re-shuffled) → in-bucket
-    * equi-join → star fallback for over-cap buckets (member vs min-id
-    * representative, linear in bucket size; min_by carries the
-    * representative's vector and carry columns so no extra join
-    * re-fetches them) → cross-band dedup. ONE spelling, so a skew-guard
-    * fix can never land in one operator and not the other (the over-cap
-    * star fallback itself was such a fix).
+  /** The scored banded candidates shared by BOTH self-join operators —
+    * [[nearDupPairs]] (undirected) and [[KnnGraph]] (directed): the band
+    * explode, the [[graft.dedup.BandedPairs]] candidates with the vectors
+    * and carry columns as payload, then the exact quantized cosine.
     *
     * `base` carries (vec_id, <carry>..., qv, nrm, __bkeys). Output:
-    * (id_a, <carry>_a..., id_b, <carry>_b..., sim) — canonical
-    * id_a < id_b once per pair when undirected (star: the rep is id_a,
-    * rep < member by construction), both orientations of every meeting
-    * when directed (star: member→rep AND rep→member, so both endpoints
-    * keep a candidate set). Dense and star rows are disjoint within one
-    * band (a bucket is either capped or not) and sim is a deterministic
-    * function of the pair, so the numBands > 1 distinct dedupes exactly.
+    * (id_a, <carry>_a..., id_b, <carry>_b..., sim), in the primitive's
+    * orientation rule. sim is a deterministic function of the pair, so
+    * the numBands > 1 distinct dedupes exactly.
     */
   private[similarity] def bandedCandidates(
       base: DataFrame, carry: Seq[String], directed: Boolean,
@@ -236,50 +216,10 @@ object SimilaritySearch {
     val banded = base
       .select(keep.map(col) :+ posexplode(col("__bkeys")): _*)
       .select(keep.map(col) ++ Seq(col("pos").as("band"), col("col").as("key")): _*)
-    val hot = banded
-      .groupBy("band", "key").agg(count(lit(1)).as("__bc"))
-      .filter(col("__bc") > maxBucket)
-      .select("band", "key")
-    val bounded = banded.join(broadcast(hot), Seq("band", "key"), "left_anti")
-    val rhs = bounded.select(
-      Seq(col("vec_id").as("__id_b")) ++
-        carry.map(c => col(c).as(s"__${c}_b")) ++
-        Seq(col("qv").as("__qv_b"), col("nrm").as("__nrm_b"),
-          col("band"), col("key")): _*)
-    val outA = Seq(col("vec_id").as("id_a")) ++ carry.map(c => col(c).as(s"${c}_a"))
-    val outB = Seq(col("__id_b").as("id_b")) ++ carry.map(c => col(s"__${c}_b").as(s"${c}_b"))
-    val simAB = dotQ(col("qv"), col("__qv_b")).cast("double") /
-      (col("nrm") * col("__nrm_b"))
-    val densePairs = bounded
-      .join(rhs, Seq("band", "key"))
-      .filter(
-        if (directed) col("vec_id") =!= col("__id_b")
-        else col("vec_id") < col("__id_b"))
-      .select(outA ++ outB :+ simAB.as("sim"): _*)
-    val hotMembers = banded.join(broadcast(hot), Seq("band", "key"))
-    val reps = hotMembers
-      .groupBy("band", "key")
-      .agg(min(col("vec_id")).as("rep"),
-        min_by(struct(Seq(col("qv"), col("nrm")) ++ carry.map(col): _*),
-          col("vec_id")).as("rv"))
-    val starBoth = hotMembers
-      .join(broadcast(reps), Seq("band", "key"))
-      .filter(col("vec_id") =!= col("rep"))
-      .withColumn("__sim",
-        dotQ(col("rv.qv"), col("qv")).cast("double") /
-          (col("rv.nrm") * col("nrm")))
-    val repA = Seq(col("rep").as("id_a")) ++ carry.map(c => col(s"rv.$c").as(s"${c}_a"))
-    val memB = Seq(col("vec_id").as("id_b")) ++ carry.map(c => col(c).as(s"${c}_b"))
-    val repToMember = starBoth.select(repA ++ memB :+ col("__sim").as("sim"): _*)
-    val starPairs =
-      if (!directed) repToMember
-      else {
-        val memA = Seq(col("vec_id").as("id_a")) ++ carry.map(c => col(c).as(s"${c}_a"))
-        val repB = Seq(col("rep").as("id_b")) ++ carry.map(c => col(s"rv.$c").as(s"${c}_b"))
-        starBoth.select(memA ++ repB :+ col("__sim").as("sim"): _*)
-          .unionAll(repToMember)
-      }
-    val pairs = densePairs.unionAll(starPairs)
+    def side(s: String): Seq[Column] = col(s"id_$s") +: carry.map(c => col(s"${c}_$s"))
+    val sim = dotQ(col("qv_a"), col("qv_b")).cast("double") / (col("nrm_a") * col("nrm_b"))
+    val pairs = graft.dedup.BandedPairs(banded, "vec_id", keep.tail, maxBucket, directed)
+      .select(side("a") ++ side("b") :+ sim.as("sim"): _*)
     if (numBands == 1) pairs else pairs.distinct()
   }
 
@@ -366,22 +306,7 @@ object SimilaritySearch {
   def nearDupPairsDerivedOracleSql(
       minSim: Double, numBands: Int, maxBucket: Long = MaxBucket): String =
     s"""WITH ${PlaneBudget.dynamicBandsSql(numBands, withLabel = false)},
-       |ok AS (SELECT band, key FROM bands GROUP BY 1, 2
-       |       HAVING count(*) <= $maxBucket),
-       |hotrep AS (SELECT band, key, min(vec_id) AS rep FROM bands
-       |           GROUP BY 1, 2 HAVING count(*) > $maxBucket),
-       |bok AS (SELECT b.* FROM bands b JOIN ok USING (band, key)),
-       |cand AS (
-       |  SELECT DISTINCT vec_a, vec_b FROM (
-       |    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |    FROM bok a JOIN bok b ON a.band = b.band AND a.key = b.key
-       |    WHERE a.vec_id < b.vec_id
-       |    UNION ALL
-       |    SELECT h.rep AS vec_a, m.vec_id AS vec_b
-       |    FROM bands m JOIN hotrep h USING (band, key)
-       |    WHERE m.vec_id <> h.rep
-       |  )
-       |)
+       |${candSql("vec_a", "vec_b", maxBucket, directed = false)}
        |SELECT vec_a, vec_b, ${dotSql("pa.qv", "pb.qv")} / (pa.nrm * pb.nrm) AS sim
        |FROM cand
        |JOIN prep pa ON vec_a = pa.vec_id
@@ -389,27 +314,24 @@ object SimilaritySearch {
        |WHERE ${dotSql("pa.qv", "pb.qv")} / (pa.nrm * pb.nrm) >= $minSim
        |ORDER BY vec_a, vec_b""".stripMargin
 
-  /** Oracle SQL for [[nearDupPairs]] — including the bucket-size cap AND
-    * the over-cap star fallback, so Spark and the oracle agree at every
-    * scale (a no-op on the test fixtures; the single pinned band's `bucket`
-    * plays the (band, key) role).
+  /** [[graft.dedup.BandedPairs.candidatesSql]] over the `bands` CTE of
+    * [[PlaneBudget.dynamicBandsSql]] — shared with [[KnnGraph]]'s oracles.
+    */
+  private[similarity] def candSql(
+      a: String, b: String, maxBucket: Long, directed: Boolean): String =
+    graft.dedup.BandedPairs.candidatesSql(
+      "vec_id", a, b, maxBucket, directed, src = "bands", bounded = "bok")
+
+  /** Oracle SQL for [[nearDupPairs]], with the
+    * [[graft.dedup.BandedPairs.candidatesSql]] cap and star (the single
+    * pinned band's `bucket` plays the key).
     */
   def nearDupPairsOracleSql(
       minSim: Double = 0.15, maxBucket: Long = MaxBucket): String =
     s"""WITH $preparedSql,
        |pb AS (SELECT vec_id, qv, nrm, bucket FROM prep WHERE nrm > 0),
-       |ok AS (SELECT bucket FROM pb GROUP BY 1 HAVING count(*) <= $maxBucket),
-       |hotrep AS (SELECT bucket, min(vec_id) AS rep FROM pb
-       |           GROUP BY 1 HAVING count(*) > $maxBucket),
-       |bok AS (SELECT p.* FROM pb p JOIN ok USING (bucket)),
-       |cand AS (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |  FROM bok a JOIN bok b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-       |  UNION ALL
-       |  SELECT h.rep AS vec_a, m.vec_id AS vec_b
-       |  FROM pb m JOIN hotrep h USING (bucket)
-       |  WHERE m.vec_id <> h.rep
-       |)
+       |bands0 AS (SELECT vec_id, 0 AS band, bucket AS key FROM pb),
+       |${graft.dedup.BandedPairs.candidatesSql("vec_id", "vec_a", "vec_b", maxBucket, directed = false)}
        |SELECT vec_a, vec_b,
        |       ${dotSql("pa.qv", "pz.qv")} / (pa.nrm * pz.nrm) AS sim
        |FROM cand

@@ -80,33 +80,34 @@ object ScaleProbe {
     * `spark.sql.shuffle.partitions` (map and reduce side must sit in the
     * same regime).
     */
-  val tinyRowParts: Map[String, Int => Int] = Map(
-    "events_sessions" -> ((k: Int) => math.max(32, 4 * k)),
-    "graph_pagerank" -> ((k: Int) => math.max(32, 4 * k)),
+  private val tinyRowRule: Int => Int = k => math.max(32, 4 * k)
+
+  val tinyRowParts: Map[String, Int => Int] = Seq(
+    "events_sessions", "graph_pagerank",
     // r14 (VERDICT r13 item 7): the minhash pair family's SHUFFLES carry
     // band keys and 16-long signatures — 45.6 MB over 1024 reduce
     // partitions at ×32 (44 KB each). Note the asymmetry for doc
     // families: the FIXTURE stays at explodeDocs' 32·k (document-sized
     // rows, the scan side is bytes-realistic); only the shuffle
     // partitions drop to the regime.
-    "dedup_minhash_pairs" -> ((k: Int) => math.max(32, 4 * k)),
+    "dedup_minhash_pairs",
     // r15 (VERDICT r14 item 2): the forced-shuffle join-sampling probe
     // moves 3-4-column TPC-H rows (~30 B each) through both join
     // exchanges — the same tiny-row shape as the events families.
-    "tpch_revenue_monthly_sampled_shuffle" -> ((k: Int) => math.max(32, 4 * k)),
+    "tpch_revenue_monthly_sampled_shuffle",
     // r15 continuation: the A-ES weighted sample ranks (doc_id, source,
     // n_chars) rows (~30 B) through RangeRank's range exchange — tiny-row
     // regime for the same M·R-constant reason.
-    "docs_weighted_sample" -> ((k: Int) => math.max(32, 4 * k)),
+    "docs_weighted_sample",
     // r15 continuation: the triangle census shuffles 2-long edge and
     // wedge rows — the events-family shape.
-    "graph_triangles" -> ((k: Int) => math.max(32, 4 * k)),
+    "graph_triangles",
     // r17: the attribution join shuffles (user_id, event_id, ts) rows and
     // the posting build's aggregate exchange carries (term, doc, positions)
     // rows collapsed map-side — both the tiny-row shape (the first sweep
     // at 32·k read 11.3 / 8.06 with per-task constants dominating).
-    "events_attribution" -> ((k: Int) => math.max(32, 4 * k)),
-    "docs_search_and" -> ((k: Int) => math.max(32, 4 * k)))
+    "events_attribution", "docs_search_and")
+    .map(_ -> tinyRowRule).toMap
 
   /** Partition count for `family` at factor `k` (default 32·k). */
   def partsFor(family: String, k: Int): Int =
@@ -121,45 +122,37 @@ object ScaleProbe {
     * Both the static and the AQE runtime thresholds must be disabled
     * (AQE re-converts to broadcast at stage materialization otherwise).
     */
-  val familyConf: Map[String, Seq[(String, String)]] = Map(
-    "tpch_revenue_monthly_sampled_shuffle" -> Seq(
+  val familyConf: Map[String, Seq[(String, String)]] = {
+    val broadcastOff = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"),
-    // graph_triangles (r15): at ×8 the closure join BROADCASTS the edge
-    // side (4.6 MB < threshold) while at ×32 it goes sort-merge — the
-    // unforced ratio compares two different plans and reads 7.87, with
-    // StageCpu showing the excess in single/5-task SORTS of the 57.6M-row
-    // wedge stream (241 MB through AQE byte-coalesced partitions). The
-    // probe therefore runs the shape a 100 TB deployment would: edge side
-    // never broadcastable (thresholds −1) and shuffled-HASH join instead
-    // of sort-merge (preferSortMergeJoin=false) — sorting the wedge
-    // stream, the algorithm's dominant intermediate, is pure waste when a
-    // per-partition hash build of the (smaller) edge side suffices.
-    "graph_triangles" -> Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.join.preferSortMergeJoin" -> "false"),
-    // docs_substring_dedup (r16): same plan-flip as graph_triangles — at
-    // ×8 the dup-gram set broadcasts (positions never shuffle) while at
-    // ×32 the position⋈dup join goes sort-merge, and the unforced ratio
-    // compares the two plans (StageCpu: x8 one 219 MB exchange, x32 two
-    // corpus-sized exchanges + a 3.1 GB merge stage). At 100 TB the dup
-    // set never broadcasts, so the probe runs that regime at both
-    // factors, shuffled-hash (sorting the position stream is waste when
-    // a per-partition hash build of the aggregated dup side suffices).
-    "docs_substring_dedup" -> Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.join.preferSortMergeJoin" -> "false"),
-    // same position⋈index join shape, same flip risk, same 100 TB regime
-    "docs_substring_incremental" -> Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.join.preferSortMergeJoin" -> "false"),
-    "docs_substring_incremental_confirmed" -> Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.join.preferSortMergeJoin" -> "false"))
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+    // the 100 TB join regime: the build side never broadcastable
+    // (thresholds −1) and shuffled-HASH join instead of sort-merge
+    // (preferSortMergeJoin=false)
+    val shuffledHash = broadcastOff :+ ("spark.sql.join.preferSortMergeJoin" -> "false")
+    Map("tpch_revenue_monthly_sampled_shuffle" -> broadcastOff) ++ Seq(
+      // graph_triangles (r15): at ×8 the closure join BROADCASTS the edge
+      // side (4.6 MB < threshold) while at ×32 it goes sort-merge — the
+      // unforced ratio compares two different plans and reads 7.87, with
+      // StageCpu showing the excess in single/5-task SORTS of the
+      // 57.6M-row wedge stream (241 MB through AQE byte-coalesced
+      // partitions). Sorting the wedge stream, the algorithm's dominant
+      // intermediate, is pure waste when a per-partition hash build of
+      // the (smaller) edge side suffices.
+      "graph_triangles",
+      // docs_substring_dedup (r16): same plan-flip as graph_triangles — at
+      // ×8 the dup-gram set broadcasts (positions never shuffle) while at
+      // ×32 the position⋈dup join goes sort-merge, and the unforced ratio
+      // compares the two plans (StageCpu: x8 one 219 MB exchange, x32 two
+      // corpus-sized exchanges + a 3.1 GB merge stage). At 100 TB the dup
+      // set never broadcasts, so the probe runs that regime at both
+      // factors (sorting the position stream is waste when a
+      // per-partition hash build of the aggregated dup side suffices).
+      "docs_substring_dedup",
+      // same position⋈index join shape, same flip risk, same regime
+      "docs_substring_incremental", "docs_substring_incremental_confirmed")
+      .map(_ -> shuffledHash)
+  }
 
   /** Stage-attribution notes carried into the artifact cell (VERDICT r13
     * item 7): for families whose ratio sits near the bound for PINNED

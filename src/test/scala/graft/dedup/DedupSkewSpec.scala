@@ -4,12 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.multimodal.ImageDedup
 import graft.queries.Tables
 
 /** Skew-guard specs: on a degenerate corpus (hundreds of byte-identical
   * docs — the "millions of boilerplate pages" failure mode at 100 TB) the
   * LSH band buckets go quadratic without a cap. These tests pin that
-  *  (a) the cap bounds minhash candidate generation to LINEAR star pairs
+  *  (a) the [[BandedPairs]] cap bounds minhash, simhash and image
+  *      candidate generation to LINEAR star pairs
   *      on such a corpus (r14: over-cap buckets emit member↔representative
   *      candidates instead of being dropped, so the mega-cluster stays
   *      connected for the CC pass),
@@ -70,6 +72,25 @@ class DedupSkewSpec extends SparkSpec {
     assert(star.forall(_._3 == 0L)) // identical fingerprints → hamming 0
   }
 
+  test("image: over-cap bucket falls back to linear star pairs, uncapped is quadratic") {
+    // 100 identical aHashes (every 8-bit band bucket holds all of them,
+    // over the 64 cap) + 8 hashes whose bands share no byte with them or
+    // with each other
+    val n = 100L
+    require(n > ImageDedup.MaxBucket, "fixture must overflow the cap")
+    val hashes = ((0L until n).map(i => (i, 0x0F0F0F0F0F0F0F0FL)) ++
+      (1L to 8L).map(i => (1000L + i, 0x1111111111111111L * i))).toDF("asset_id", "ahash")
+    val uncapped = ImageDedup.nearDupPairs(hashes, maxBucket = Long.MaxValue)
+    assert(uncapped.count() >= n * (n - 1) / 2)
+    val capped = ImageDedup.nearDupPairs(hashes)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(capped.length <= n - 1, s"capped pair count ${capped.length} is not linear")
+    val star = capped.filter { case (a, _, _) => a == 0L }
+    assert(star.length === (n - 1).toInt, "every identical asset must pair with the min-id rep")
+    assert(star.forall(_._3 == 0L)) // identical aHashes → hamming 0
+    assert(star.map(_._2).toSet === (1L until n).toSet)
+  }
+
   test("incremental: a delta copy of hot-bucket base content still hits the index") {
     // 200 identical docs IN THE INDEX make every band bucket over-cap; a
     // new copy arriving in the delta must still match (pre-r14 it was
@@ -108,5 +129,15 @@ class DedupSkewSpec extends SparkSpec {
     val uncappedSh = SimHash.nearDupPairs(fps, maxBucket = Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(cappedSh === uncappedSh)
+  }
+
+  test("image: cap is a no-op on the gated fixture (mm_dedup_pairs_gated's saved hashes)") {
+    val aHashes = spark.read.parquet(ImageDedup.ensureSavedHashes(spark, 100))
+    val cappedImg = ImageDedup.nearDupPairs(aHashes)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val uncappedImg = ImageDedup.nearDupPairs(aHashes, maxBucket = Long.MaxValue)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(cappedImg.nonEmpty)
+    assert(cappedImg === uncappedImg)
   }
 }

@@ -19,6 +19,22 @@ class UniverseSampledSpec extends SparkSpec {
     assert(a.nonEmpty)
   }
 
+  test("a pct outside [1, 100] fails at plan build, naming the argument") {
+    for (bad <- Seq(0, -10, 101, 150)) {
+      val errors = Seq(
+        intercept[IllegalArgumentException](UniverseSampled.sample(docs, col("doc_id"), bad)),
+        intercept[IllegalArgumentException](UniverseSampled.keep(col("doc_id"), bad)),
+        intercept[IllegalArgumentException](UniverseSampled.keepSql("doc_id", bad)),
+        intercept[IllegalArgumentException](UniverseSampled.scale(bad)),
+        intercept[IllegalArgumentException](UniverseSampled.scaleSql(bad)))
+      errors.foreach(e => assert(e.getMessage.contains(s"pct must be in [1, 100] (got $bad)")))
+    }
+    // the range ends stay valid
+    assert(UniverseSampled.scale(1) === 100.0)
+    assert(UniverseSampled.scaleSql(100) === "1.0")
+    assert(UniverseSampled.keepSql("doc_id", 100).endsWith("% 100 < 100"))
+  }
+
   test("achieved rate ≈ pct and HT estimate tracks the exact total") {
     val n = docs.count()
     val kept = UniverseSampled.sample(docs, col("doc_id"), 10).count()
