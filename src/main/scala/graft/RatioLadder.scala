@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.compare.ResultComparator
 import graft.queries.{ReferenceQueries => RQ, Tables}
-import graft.sampling.{SamplingConfig, SamplingReport}
+import graft.sampling.{HtTwin, SamplingConfig, SamplingReport}
 import graft.sinks.{ReportSink, TextKVSink}
 
 /** The reference's end-to-end experiment protocol as a runnable harness:
@@ -49,7 +49,7 @@ object RatioLadder {
       // (RSMRResultComparator.java:69-71), so the on-disk protocol must too
       // (graft.Main compare replays it).
       TextKVSink.write(raw, keys.head, countCol, s"$outDir/ratio_$r/out")
-      val est = raw.withColumn(s"est_$countCol", s.htScale(col(countCol))).drop(countCol)
+      val est = HtTwin.scaled(raw, s.htScale, Seq(countCol))
       val err = ResultComparator.dataErrorRate(exact, est, keys, countCol, s"est_$countCol")
       val rpt = s.report()
       ReportSink.emit(rpt, s"$outDir/ratio_$r/report.json")

@@ -7,8 +7,8 @@ import graft.dedup.{CosinePairs, DedupClusters, DedupCorpus, JaccardPairs, MinHa
 import graft.similarity.SimilaritySearch
 import graft.multimodal.Multimodal
 import graft.text.TextAnalysis
-import graft.queries.{ReferenceQueries => RQ, Tables}
-import graft.sampling.SamplingConfig
+import graft.queries.{ReferenceQueries => RQ, Tables, TpchQueries}
+import graft.sampling.{HtTwin, Sampled, SamplingConfig, UniverseSampled}
 
 /** How a declared query's result is judged against an independent engine. */
 sealed trait Oracle
@@ -40,10 +40,10 @@ object SparkEntry {
     * The reference's flagship: sampled word count with HT scale-up
     * (SURVEY.md §7.3).
     */
-  def entry(spark: SparkSession): DataFrame =
-    RQ.wordCountSampled(
-      Tables.documents(spark, "/root/testdata/sf0.001"),
-      SamplingConfig(ratio = 0.1))
+  def entry(spark: SparkSession): DataFrame = {
+    val r10 = Sampled(Tables.documents(spark, "/root/testdata/sf0.001"), SamplingConfig(ratio = 0.1))
+    HtTwin.scaled(RQ.wordCount(r10.data), r10.htScale, Seq("cnt"))
+  }
 
   /** Every declared query, each stated once with its oracle — one entry
     * per implemented operator from SURVEY.md §2. Built on first use, so
@@ -93,9 +93,7 @@ object SparkEntry {
         |  count(*) AS cnt
         |FROM events WHERE event_id % 97 <> 0 GROUP BY 1 ORDER BY 1""".stripMargin)),
     Query("wireless_links", (s, dir) => RQ.wirelessLinks(Tables.events(s, dir)).orderBy("link"),
-      Sql("""SELECT concat(greatest(user_id, k), '->', least(user_id, k)) AS link, count(*) AS cnt
-        |FROM (SELECT user_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events)
-        |WHERE k IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Sql(RQ.wirelessLinksOracleSql())),
     // --- graph analytics over the P10 link graph: integer fixed-point
     // --- PageRank (bit-exact across engines — no floating point anywhere)
     // --- and the degree-distribution profile ---
@@ -150,36 +148,39 @@ object SparkEntry {
     Query("graph_moments_sampled_u10", (s, dir) =>
       graft.graphs.PageRank.graphMomentsSampledU(Tables.events(s, dir)),
       Sql(graft.graphs.PageRank.graphMomentsSampledUOracleSql())),
-    // --- approximate mode (seeded sample + HT scale-up; no SQL oracle:
-    // --- an external engine can't reproduce Spark's RNG stream) ---
-    Query("wordcount_sampled_r10", (s, dir) =>
-      RQ.wordCountSampled(Tables.documents(s, dir), SamplingConfig(ratio = 0.1))
-        .orderBy("word"),
-      SeededDraws),
-    Query("wireless_sampled_r10", (s, dir) =>
-      RQ.sampled(Tables.events(s, dir), SamplingConfig(ratio = 0.1), RQ.wirelessLinks)._2
-        .orderBy("link"),
-      SeededDraws),
+    // --- approximate mode: every single-table sampled twin is its exact
+    // --- query over the keep-set, HT-scaled by graft.sampling.HtTwin.
+    // --- Seeded Bernoulli (r10) twins have no SQL oracle: an external
+    // --- engine can't reproduce Spark's RNG stream ---
+    Query("wordcount_sampled_r10", (s, dir) => {
+      val r10 = Sampled(Tables.documents(s, dir), SamplingConfig(ratio = 0.1))
+      HtTwin.scaled(RQ.wordCount(r10.data), r10.htScale, Seq("cnt")).orderBy("word")
+    }, SeededDraws),
+    Query("wireless_sampled_r10", (s, dir) => {
+      val r10 = Sampled(Tables.events(s, dir), SamplingConfig(ratio = 0.1))
+      HtTwin.scaled(RQ.wirelessLinks(r10.data), r10.htScale, Seq("cnt")).orderBy("link")
+    }, SeededDraws),
     // the AQP core applied to the LLM-curation layer (VERDICT r7 gap 1):
     // quality distribution + corpus token budget on a 10 % seeded sample,
     // HT-scaled — the "survey the corpus before the full 100 TB pass" shape
-    Query("text_quality_sampled_r10", (s, dir) =>
-      RQ.sampled(Tables.documents(s, dir), SamplingConfig(ratio = 0.1),
-        TextAnalysis.qualityDistribution)._2.orderBy("bucket"),
-      SeededDraws),
-    Query("text_tokens_sampled_r10", (s, dir) =>
-      RQ.sampled(Tables.documents(s, dir), SamplingConfig(ratio = 0.1),
-        TextAnalysis.tokenTotals, countCol = "total")._2,
-      SeededDraws),
+    Query("text_quality_sampled_r10", (s, dir) => {
+      val r10 = Sampled(Tables.documents(s, dir), SamplingConfig(ratio = 0.1))
+      HtTwin.scaled(TextAnalysis.qualityDistribution(r10.data), r10.htScale, Seq("cnt"))
+        .orderBy("bucket")
+    }, SeededDraws),
+    Query("text_tokens_sampled_r10", (s, dir) => {
+      val r10 = Sampled(Tables.documents(s, dir), SamplingConfig(ratio = 0.1))
+      HtTwin.scaled(TextAnalysis.tokenTotals(r10.data), r10.htScale, Seq("total"))
+    }, SeededDraws),
     // --- universe-sampled (hash-range) AQP twins: the keep-predicate is a
     // --- deterministic md5-range test on the sampling unit, so unlike the
     // --- rand(seed) r10 twins these replay bit-exactly in DuckDB — the
     // --- fully ORACLE-GATED sampled family (the DedupRate pattern,
     // --- VERDICT r8 next-1, generalized via sampling/UniverseSampled) ---
     Query("wordcount_sampled_u10", (s, dir) =>
-      RQ.sampledUniverse(Tables.documents(s, dir), col("doc_id"), 10, RQ.wordCount(_))
-        .orderBy("word"),
-      Sql(wordCountSampledUSql(10))),
+      HtTwin.scaled(RQ.wordCount(UniverseSampled.sample(Tables.documents(s, dir), col("doc_id"), 10)),
+        UniverseSampled.htScale(10), Seq("cnt")).orderBy("word"),
+      Sql(WordCountU10Sql)),
     // the reference's FULL experiment protocol as one gated query: the
     // universe-sampling ladder with per-rung comparator error (integer
     // basis points) and T4 bound (VERDICT r15 item 6)
@@ -202,20 +203,27 @@ object SparkEntry {
         .orderBy(col("pct").desc),
       Sql(graft.RatioLadder.charcountLadderUOracleSql)),
     Query("wireless_sampled_u10", (s, dir) =>
-      RQ.sampledUniverse(Tables.events(s, dir), col("event_id"), 10, RQ.wirelessLinks)
-        .orderBy("link"),
-      Sql(wirelessSampledUSql(10))),
+      HtTwin.scaled(RQ.wirelessLinks(UniverseSampled.sample(Tables.events(s, dir), col("event_id"), 10)),
+        UniverseSampled.htScale(10), Seq("cnt")).orderBy("link"),
+      Sql(HtTwin.sql(RQ.wirelessLinksOracleSql, "events", "event_id", 10, Seq("cnt")))),
     Query("text_quality_sampled_u10", (s, dir) =>
-      RQ.sampledUniverse(Tables.documents(s, dir), col("doc_id"), 10,
-        TextAnalysis.qualityDistribution).orderBy("bucket"),
-      Sql(TextAnalysis.qualityDistributionSampledUOracleSql(10))),
+      HtTwin.scaled(
+        TextAnalysis.qualityDistribution(UniverseSampled.sample(Tables.documents(s, dir), col("doc_id"), 10)),
+        UniverseSampled.htScale(10), Seq("cnt")).orderBy("bucket"),
+      Sql(HtTwin.sql(
+        TextAnalysis.qualityDistributionOracleSql, "documents", "doc_id", 10, Seq("cnt")))),
     Query("text_tokens_sampled_u10", (s, dir) =>
-      RQ.sampledUniverse(Tables.documents(s, dir), col("doc_id"), 10,
-        TextAnalysis.tokenTotals, countCol = "total"),
-      Sql(TextAnalysis.tokenTotalsSampledUOracleSql(10))),
+      HtTwin.scaled(
+        TextAnalysis.tokenTotals(UniverseSampled.sample(Tables.documents(s, dir), col("doc_id"), 10)),
+        UniverseSampled.htScale(10), Seq("total")),
+      Sql(HtTwin.sql(TextAnalysis.tokenTotalsOracleSql, "documents", "doc_id", 10, Seq("total")))),
+    // unit = the lineitem row identity (TpchQueries.lineUnit)
     Query("tpch_q6_sampled_u10", (s, dir) =>
-      graft.queries.TpchQueries.q6SampledUniverse(Tables.lineitem(s, dir)),
-      Sql(graft.queries.TpchQueries.q6SampledUniverseOracleSql())),
+      HtTwin.scaled(
+        TpchQueries.q6(UniverseSampled.sample(Tables.lineitem(s, dir), TpchQueries.lineUnit, 10)),
+        UniverseSampled.htScale(10), Seq("revenue_e4")),
+      Sql(HtTwin.sql(
+        TpchQueries.q6OracleSql, "lineitem", TpchQueries.LineUnitSql, 10, Seq("revenue_e4")))),
     // correlated JOIN sampling (Quickr §4): both sides universe-sampled on
     // the JOIN KEY, so kept orders travel with ALL their lineitems and one
     // first-order ×(1/p) HT scale unbiases the monthly roll-up —
@@ -773,15 +781,11 @@ object SparkEntry {
     // sample-below-parse XML at 10%: parse CPU scales with the keep ratio,
     // and the hash-range sample replays in DuckDB → fully oracle-gated
     Query("wordcount_xml_presample_u10", (s, dir) =>
-      RQ.wordCount(
-        graft.sources.XmlSource.readPagesPresampled(
-          s, graft.sources.XmlSource.fixturePath(s, dir), Some(10)))
-        .withColumn("est_cnt",
-          col("cnt") * org.apache.spark.sql.functions.lit(
-            graft.sampling.UniverseSampled.scale(10)))
-        .drop("cnt")
-        .orderBy("word"),
-      Sql(wordCountSampledUSql(10))),
+      HtTwin.scaled(
+        RQ.wordCount(graft.sources.XmlSource.readPagesPresampled(
+          s, graft.sources.XmlSource.fixturePath(s, dir), Some(10))),
+        UniverseSampled.htScale(10), Seq("cnt")).orderBy("word"),
+      Sql(WordCountU10Sql)),
     // gzip-compressed text ingestion (non-splittable codec path) — must
     // hash-match wordcount
     Query("wordcount_text_gz", (s, dir) =>
@@ -827,24 +831,26 @@ object SparkEntry {
       graft.queries.TpchQueries.q1(Tables.lineitem(s, dir))
         .orderBy("l_returnflag", "l_linestatus"),
       Sql(graft.queries.TpchQueries.Q1OracleSql)),
-    Query("tpch_q1_sampled_r10", (s, dir) =>
-      graft.queries.TpchQueries.q1Sampled(Tables.lineitem(s, dir), SamplingConfig(ratio = 0.1))
-        .orderBy("l_returnflag", "l_linestatus"),
-      SeededDraws),
-    // order-atomic universe sample (unit = l_orderkey) → every HT estimate
-    // oracle-gated; the last seeded-only sampled family's deterministic twin
+    Query("tpch_q1_sampled_r10", (s, dir) => {
+      val r10 = Sampled(Tables.lineitem(s, dir), SamplingConfig(ratio = 0.1))
+      HtTwin.scaled(TpchQueries.q1(r10.data), r10.htScale, Q1Additive)
+        .orderBy("l_returnflag", "l_linestatus")
+    }, SeededDraws),
+    // order-atomic universe sample (unit = l_orderkey): all lineitems of an
+    // order are kept or dropped together (the Quickr join-key discipline),
+    // and every HT estimate is oracle-gated
     Query("tpch_q1_sampled_u10", (s, dir) =>
-      graft.queries.TpchQueries.q1SampledUniverse(Tables.lineitem(s, dir))
-        .orderBy("l_returnflag", "l_linestatus"),
-      Sql(graft.queries.TpchQueries.q1SampledUniverseOracleSql())),
+      HtTwin.scaled(TpchQueries.q1(UniverseSampled.sample(Tables.lineitem(s, dir), col("l_orderkey"), 10)),
+        UniverseSampled.htScale(10), Q1Additive).orderBy("l_returnflag", "l_linestatus"),
+      Sql(HtTwin.sql(TpchQueries.q1OracleSql, "lineitem", "l_orderkey", 10, Q1Additive))),
     Query("tpch_q6", (s, dir) => graft.queries.TpchQueries.q6(Tables.lineitem(s, dir)),
       Sql(graft.queries.TpchQueries.Q6OracleSql)),
     // seeded Bernoulli sample + HT scale-up; no external oracle by design
     // (rows-only driver check, statistical spec in TpchSpec)
-    Query("tpch_q6_sampled_r10", (s, dir) =>
-      graft.queries.TpchQueries.q6Sampled(
-        Tables.lineitem(s, dir), SamplingConfig(ratio = 0.1)),
-      SeededDraws),
+    Query("tpch_q6_sampled_r10", (s, dir) => {
+      val r10 = Sampled(Tables.lineitem(s, dir), SamplingConfig(ratio = 0.1))
+      HtTwin.scaled(TpchQueries.q6(r10.data), r10.htScale, Seq("revenue_e4"))
+    }, SeededDraws),
     Query("tpch_q3", (s, dir) =>
       graft.queries.TpchQueries.q3(
         Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir)),
@@ -1014,11 +1020,7 @@ object SparkEntry {
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
     Query("events_quantiles", (s, dir) =>
       RQ.eventQuantiles(Tables.events(s, dir)).orderBy("event_type"),
-      Sql("""SELECT event_type,
-        |       quantile_cont(value, 0.5) AS p50,
-        |       quantile_cont(value, 0.9) AS p90,
-        |       quantile_cont(value, 0.99) AS p99
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Sql(RQ.eventQuantilesOracleSql())),
     Query("events_distinct_users", (s, dir) =>
       RQ.eventDistinctUsers(Tables.events(s, dir)).orderBy("event_type"),
       Sql("""SELECT event_type, count(DISTINCT user_id) AS n_users
@@ -1034,15 +1036,9 @@ object SparkEntry {
     // approximate percentiles themselves replay in DuckDB (unlike the
     // t-digest twin) — quantiles need no HT scaling, just the sample
     Query("events_quantiles_sampled_u10", (s, dir) =>
-      RQ.eventQuantiles(graft.sampling.UniverseSampled.sample(
+      RQ.eventQuantiles(UniverseSampled.sample(
         Tables.events(s, dir), col("event_id"), 10)).orderBy("event_type"),
-      Sql(s"""SELECT event_type,
-         |       quantile_cont(value, 0.5) AS p50,
-         |       quantile_cont(value, 0.9) AS p90,
-         |       quantile_cont(value, 0.99) AS p99
-         |FROM events
-         |WHERE ${graft.sampling.UniverseSampled.keepSql("event_id", 10)}
-         |GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Sql(HtTwin.sql(RQ.eventQuantilesOracleSql, "events", "event_id", 10, Nil))),
     // the DETERMINISTIC sketch twin (VERDICT r15 item 8): base-2
     // log-histogram quantiles — merge is per-bucket sum (order-free,
     // unlike the t-digest), so this one IS hash-gated; ≤ 2^-4 relative
@@ -1591,26 +1587,14 @@ object SparkEntry {
   private val WordCountSql: String =
     RQ.wordCountOracleSql() + "\nORDER BY word"
 
-  /** Universe-sampled word count: [[RQ.wordCountOracleSql]] over the
-    * hash-range keep-set, counts HT-scaled ×1/p.
-    */
-  private def wordCountSampledUSql(pct: Int): String = {
-    import graft.sampling.UniverseSampled
-    RQ.wordCountOracleSql(
-      UniverseSampled.keepSql("doc_id", pct),
-      s"count(*) * ${UniverseSampled.scaleSql(pct)} AS est_cnt") +
-      "\nORDER BY word"
-  }
+  /** The word-count universe twins' oracle (unit = doc_id), shared by the
+    * parquet and the XML presample twin. */
+  private val WordCountU10Sql: String =
+    HtTwin.sql(from => RQ.wordCountOracleSql(from = from), "documents", "doc_id", 10, Seq("cnt"))
 
-  /** Universe-sampled wireless links (unit = event row). */
-  private def wirelessSampledUSql(pct: Int): String = {
-    import graft.sampling.UniverseSampled
-    s"""SELECT concat(greatest(user_id, k), '->', least(user_id, k)) AS link,
-       |       count(*) * ${UniverseSampled.scaleSql(pct)} AS est_cnt
-       |FROM (SELECT user_id, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
-       |      FROM events WHERE ${UniverseSampled.keepSql("event_id", pct)})
-       |WHERE k IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin
-  }
+  /** TPC-H Q1's additive columns, HT-scaled by both Q1 twins. */
+  private val Q1Additive =
+    Seq("sum_qty", "sum_base_price_c", "sum_disc_price_e4", "sum_charge_e6", "cnt")
 
   /** Universe-stratified estimate oracle (integer bp thresholds, exact HT
     * weights).

@@ -1,9 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sampling.{Sampled, SamplingConfig}
 import graft.sources.AccessLog
 
 /** The reference's analytics queries, re-expressed as declarative DataFrame
@@ -13,8 +12,8 @@ import graft.sources.AccessLog
   * partial aggregation for free (the reference wired its reducer as a
   * combiner by hand: RandomizedWordCount.java:92), and filters/projections
   * that Catalyst pushes into the parquet scan. Each takes the source
-  * DataFrame so it composes with [[graft.sampling.Sampled]]: sampled mode is
-  * `query(sampled.data)` + HT scale-up of the additive aggregates.
+  * DataFrame so it composes with any sampler: its sampled twin is
+  * [[graft.sampling.HtTwin.scaled]] over `query(sample.data)`.
   *
   * Input mapping (FIXTURES.md §2): gutenberg/wiki text → `documents.text`;
   * the Apache access log → `events` (`user_id`≈host, `ts`≈datetime,
@@ -35,15 +34,16 @@ object ReferenceQueries {
     * across the plain, sampled-universe, and ladder oracles; an edit to
     * the convention applied to one would silently desynchronize gates).
     * `docCond` filters the corpus (a keep-predicate or TRUE);
-    * `countSelect` is the aggregate projection; no ORDER BY — callers
-    * append their own.
+    * `countSelect` is the aggregate projection; `from` is the documents
+    * relation; no ORDER BY — callers append their own.
     */
   def wordCountOracleSql(
       docCond: String = "TRUE",
-      countSelect: String = "count(*) AS cnt"): String =
+      countSelect: String = "count(*) AS cnt",
+      from: String = "documents"): String =
     s"""SELECT word, $countSelect
        |FROM (SELECT unnest(regexp_split_to_array(lower(text), '$WordDelims')) AS word
-       |      FROM documents
+       |      FROM $from
        |      WHERE ($docCond) AND NOT regexp_matches(lower(text), '[0-9]'))
        |WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$$')
        |GROUP BY word""".stripMargin
@@ -183,6 +183,12 @@ object ReferenceQueries {
       .agg(count(lit(1)).as("cnt"))
   }
 
+  /** DuckDB oracle of [[wirelessLinks]] over the events relation `from`. */
+  def wirelessLinksOracleSql(from: String = "events"): String =
+    s"""SELECT concat(greatest(user_id, k), '->', least(user_id, k)) AS link, count(*) AS cnt
+       |FROM (SELECT user_id, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k FROM $from)
+       |WHERE k IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin
+
   // --- CLF pipelines: the reference's actual string processing. Raw log
   // --- lines (synthesized deterministically from `events`) → regexp CLF
   // --- parse (P5) → the seven log tasks, so the parse/extract/prefix logic
@@ -261,6 +267,14 @@ object ReferenceQueries {
         percentile(col("value"), lit(0.5)).as("p50"),
         percentile(col("value"), lit(0.9)).as("p90"),
         percentile(col("value"), lit(0.99)).as("p99"))
+
+  /** DuckDB oracle of [[eventQuantiles]] over the events relation `from`. */
+  def eventQuantilesOracleSql(from: String = "events"): String =
+    s"""SELECT event_type,
+       |       quantile_cont(value, 0.5) AS p50,
+       |       quantile_cont(value, 0.9) AS p90,
+       |       quantile_cont(value, 0.99) AS p99
+       |FROM $from GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** The 100 TB twin of [[eventQuantiles]]: `approx_percentile` (t-digest
     * style sketch — mergeable, bounded memory per group, one pass) instead
@@ -349,45 +363,4 @@ object ReferenceQueries {
       .groupBy(col("dow"))
       .pivot("event_type", EventTypes)
       .agg(sum(col("cents")))
-
-  /** Sampled word count with Horvitz–Thompson scale-up: the reference's
-    * flagship approximate query (SURVEY.md §7.3). Counts computed on a
-    * seeded Bernoulli sample, scaled by 1/ratio — the estimator the
-    * reference's comparator applies (RSMRResultComparator.java:58-71).
-    */
-  def wordCountSampled(docs: DataFrame, cfg: SamplingConfig): DataFrame = {
-    val s = Sampled(docs, cfg)
-    wordCount(s.data)
-      .withColumn("est_cnt", s.htScale(col("cnt")))
-      .drop("cnt")
-  }
-
-  /** Sampled variant of any of the count-shaped pipelines above. */
-  def sampled(
-      source: DataFrame,
-      cfg: SamplingConfig,
-      query: DataFrame => DataFrame,
-      countCol: String = "cnt"): (Sampled, DataFrame) = {
-    val s = Sampled(source, cfg)
-    val est = query(s.data).withColumn(s"est_$countCol", s.htScale(col(countCol))).drop(countCol)
-    (s, est)
-  }
-
-  /** Universe-sampled (hash-range) variant of any count-shaped pipeline:
-    * same HT scale-up as [[sampled]], but the keep-predicate is a
-    * deterministic hash of `unit` ([[graft.sampling.UniverseSampled]]),
-    * so the result is fully replayable by the DuckDB oracle — the
-    * oracle-proven AQP path beside the seeded Bernoulli one.
-    */
-  def sampledUniverse(
-      source: DataFrame,
-      unit: Column,
-      pct: Int,
-      query: DataFrame => DataFrame,
-      countCol: String = "cnt"): DataFrame =
-    query(graft.sampling.UniverseSampled.sample(source, unit, pct))
-      .withColumn(
-        s"est_$countCol",
-        col(countCol) * lit(graft.sampling.UniverseSampled.scale(pct)))
-      .drop(countCol)
 }

@@ -1,9 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-import graft.sampling.{Sampled, SamplingConfig}
 
 /** Relational analytics over the TPC-H-style tables — demonstrates the
   * sampling/AQP layer on classic warehouse aggregates (the reference's
@@ -40,61 +38,6 @@ object TpchQueries {
         count(lit(1)).as("cnt"))
   }
 
-  /** Sampled Q1 with HT scale-up on every additive aggregate. */
-  def q1Sampled(lineitem: DataFrame, cfg: SamplingConfig): DataFrame = {
-    val s = Sampled(lineitem, cfg)
-    val est = q1(s.data)
-    est.select(
-      col("l_returnflag"), col("l_linestatus"),
-      s.htScale(col("sum_qty")).as("est_sum_qty"),
-      s.htScale(col("sum_base_price_c")).as("est_sum_base_price_c"),
-      s.htScale(col("sum_disc_price_e4")).as("est_sum_disc_price_e4"),
-      s.htScale(col("sum_charge_e6")).as("est_sum_charge_e6"),
-      s.htScale(col("cnt")).as("est_cnt"))
-  }
-
-  /** Universe-sampled Q1: the hash-range (deterministic) AQP twin of
-    * [[q1Sampled]], closing the last seeded-only sampled family (VERDICT r9
-    * missing-1). The sampling UNIT is `l_orderkey` — ORDER atomicity, the
-    * Quickr join-key discipline: all lineitems of an order are kept or
-    * dropped together, so per-order structure survives and the same keep-set
-    * composes with order-grained joins. The keep-predicate replays
-    * bit-exactly in DuckDB, so every HT-scaled estimate is oracle-gated
-    * (unlike the seeded `_r10` twin, rows-only by construction).
-    */
-  def q1SampledUniverse(lineitem: DataFrame, pct: Int = 10): DataFrame = {
-    val scale = lit(graft.sampling.UniverseSampled.scale(pct))
-    q1(graft.sampling.UniverseSampled.sample(lineitem, col("l_orderkey"), pct))
-      .select(
-        col("l_returnflag"), col("l_linestatus"),
-        (col("sum_qty") * scale).as("est_sum_qty"),
-        (col("sum_base_price_c") * scale).as("est_sum_base_price_c"),
-        (col("sum_disc_price_e4") * scale).as("est_sum_disc_price_e4"),
-        (col("sum_charge_e6") * scale).as("est_sum_charge_e6"),
-        (col("cnt") * scale).as("est_cnt"))
-  }
-
-  /** DuckDB oracle for [[q1SampledUniverse]] — [[Q1OracleSql]]'s integer
-    * aggregates over the hash-range keep-set, each scaled ×1/p.
-    */
-  def q1SampledUniverseOracleSql(pct: Int = 10): String = {
-    val keep = graft.sampling.UniverseSampled.keepSql("l_orderkey", pct)
-    val sc = graft.sampling.UniverseSampled.scaleSql(pct)
-    s"""SELECT l_returnflag, l_linestatus,
-       |  CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) * $sc AS est_sum_qty,
-       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) * $sc AS est_sum_base_price_c,
-       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-       |       * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) * $sc AS est_sum_disc_price_e4,
-       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-       |       * (100 - CAST(round(l_discount * 100) AS BIGINT))
-       |       * (100 + CAST(round(l_tax * 100) AS BIGINT))) AS BIGINT) * $sc AS est_sum_charge_e6,
-       |  count(*) * $sc AS est_cnt
-       |FROM lineitem
-       |WHERE $keep
-       |  AND l_shipdate <= TIMESTAMP '$Q1Cutoff 00:00:00'
-       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
-
   /** TPC-H Q6 (forecasting revenue change): single-table filter-aggregate —
     * the canonical predicate-pushdown showcase. All three filters reach the
     * parquet scan as PushedFilters (date range, discount band, quantity),
@@ -121,53 +64,27 @@ object TpchQueries {
       .select(coalesce(col("revenue_e4"), lit(0L)).as("revenue_e4"))
   }
 
-  /** Sampled Q6 with HT scale-up — the filter-heavy single-aggregate is
-    * the AQP sweet spot: one global sum over ~6 k qualifying rows at sf0.1
-    * keeps the relative error ≈ √((1−p)/(p·n)) small, unlike per-group
-    * estimates over tiny groups (a sampled Q3 would average 4 lineitems
-    * per order — statistically useless, so it is deliberately NOT offered).
+  /** The sampled Q6 twins' sampling unit, the lineitem row identity
+    * (orderkey:linenumber), and its SQL spelling. A sampled Q3 is
+    * deliberately NOT offered: it would average ~4 lineitems per order,
+    * statistically useless, while Q6's one global sum over ~6 k qualifying
+    * rows at sf0.1 keeps the relative error √((1−p)/(p·n)) small.
     */
-  def q6Sampled(lineitem: DataFrame, cfg: SamplingConfig): DataFrame = {
-    val s = Sampled(lineitem, cfg)
-    q6(s.data).select(s.htScale(col("revenue_e4")).as("est_revenue_e4"))
-  }
+  def lineUnit: Column = concat(
+    col("l_orderkey").cast("string"), lit(":"), col("l_linenumber").cast("string"))
+  val LineUnitSql = "CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)"
 
-  /** Universe-sampled Q6: the hash-range (deterministic) AQP twin of
-    * [[q6Sampled]] — the sampling unit is the lineitem row identity
-    * (orderkey:linenumber), so the keep-set is replayable in DuckDB and
-    * the whole estimator is oracle-gated ([[graft.sampling.UniverseSampled]]).
-    */
-  def q6SampledUniverse(lineitem: DataFrame, pct: Int = 10): DataFrame = {
-    val unit = concat(
-      col("l_orderkey").cast("string"), lit(":"), col("l_linenumber").cast("string"))
-    q6(graft.sampling.UniverseSampled.sample(lineitem, unit, pct))
-      .select((col("revenue_e4") * lit(graft.sampling.UniverseSampled.scale(pct)))
-        .as("est_revenue_e4"))
-  }
-
-  /** DuckDB oracle for [[q6SampledUniverse]]. */
-  def q6SampledUniverseOracleSql(pct: Int = 10): String = {
-    val keep = graft.sampling.UniverseSampled.keepSql(
-      "CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)", pct)
-    s"""SELECT CAST(coalesce(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-       |       * CAST(round(l_discount * 100) AS BIGINT)), 0) AS BIGINT)
-       |       * ${graft.sampling.UniverseSampled.scaleSql(pct)} AS est_revenue_e4
-       |FROM lineitem
-       |WHERE $keep
-       |  AND l_shipdate >= TIMESTAMP '$Q6Start 00:00:00'
-       |  AND l_shipdate < TIMESTAMP '$Q6End 00:00:00'
-       |  AND l_discount >= 0.05 AND l_discount <= 0.07
-       |  AND l_quantity < 24""".stripMargin
-  }
-
-  val Q6OracleSql: String =
+  /** DuckDB oracle of [[q6]] over the relation `from`. */
+  def q6OracleSql(from: String): String =
     s"""SELECT CAST(coalesce(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
       |       * CAST(round(l_discount * 100) AS BIGINT)), 0) AS BIGINT) AS revenue_e4
-      |FROM lineitem
+      |FROM $from
       |WHERE l_shipdate >= TIMESTAMP '$Q6Start 00:00:00'
       |  AND l_shipdate < TIMESTAMP '$Q6End 00:00:00'
       |  AND l_discount >= 0.05 AND l_discount <= 0.07
       |  AND l_quantity < 24""".stripMargin
+
+  val Q6OracleSql: String = q6OracleSql("lineitem")
 
   val Q3Cutoff = "1998-06-15"
 
@@ -302,7 +219,8 @@ object TpchQueries {
        |WHERE r_name = '$regionName'
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val Q1OracleSql: String =
+  /** DuckDB oracle of [[q1]] over the relation `from`. */
+  def q1OracleSql(from: String): String =
     s"""SELECT l_returnflag, l_linestatus,
        |  CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_price_c,
@@ -312,9 +230,11 @@ object TpchQueries {
        |       * (100 - CAST(round(l_discount * 100) AS BIGINT))
        |       * (100 + CAST(round(l_tax * 100) AS BIGINT))) AS BIGINT) AS sum_charge_e6,
        |  count(*) AS cnt
-       |FROM lineitem
+       |FROM $from
        |WHERE l_shipdate <= TIMESTAMP '$Q1Cutoff 00:00:00'
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  val Q1OracleSql: String = q1OracleSql("lineitem")
 
   val Q10Start = "1996-10-01"
   val Q10End = "1997-01-01"

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * variance at p = 0.1) and BREAKS per-key completeness (a kept order
   * sees a ~p-thinned subset of its lineitems, so per-key structure is
   * destroyed); and the deliberate no-sampled-Q3 note
-  * ([[graft.queries.TpchQueries.q6Sampled]]) still stands — per-ORDER
+  * ([[graft.queries.TpchQueries.lineUnit]]) still stands — per-ORDER
   * estimates from ~4 lineitems are statistically useless. The estimator
   * offered here aggregates COARSELY (order months, each spanning ~1/84
   * of all orderkeys), where the per-group key population carries the

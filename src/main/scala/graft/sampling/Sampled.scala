@@ -82,17 +82,7 @@ object SamplingReport {
   *    so the sampled row-set is reproducible run-to-run — an intentional fix
   *    of the reference's unseeded Random.
   *
-  * Choosing between this and [[UniverseSampled]]: this seeded Bernoulli
-  * filter is the CHEAPEST per row (one RNG draw, no hashing) — prefer it
-  * for scan-bound single-aggregate shapes like TPC-H Q6, where the
-  * universe sampler still hashes every row that passes the query's own
-  * predicates and the sample has little downstream work to save. Prefer
-  * [[UniverseSampled]] when per-row downstream work dominates, or when you
-  * need its extras: external replayability (oracle-provable keep-set),
-  * unit atomicity (whole clusters/orders kept together), and stability
-  * under input re-splits (rand's row-position determinism is per
-  * PARTITIONING, not per data). Full decision rule in
-  * [[UniverseSampled]]'s scaladoc.
+  * Which sampler to use: see [[UniverseSampled]].
   */
 final class Sampled private (
     val source: DataFrame,
@@ -108,7 +98,7 @@ final class Sampled private (
     */
   val data: DataFrame =
     if (ratio >= 1.0) source
-    else source.filter(rand(config.seed) < lit(ratio))
+    else source.filter(Sampled.keep(config))
 
   /** Exact (total, sampled) cardinalities in ONE pass over the source: a
     * single zero-column scan computes `count(*)` and the number of rows the
@@ -127,7 +117,7 @@ final class Sampled private (
       // rand() inside aggregate arguments); the projection fuses into the
       // scan stage, so this is still one pass.
       val row = source
-        .select(when(rand(config.seed) < lit(ratio), 1L).otherwise(0L).as("__kept"))
+        .select(when(Sampled.keep(config), 1L).otherwise(0L).as("__kept"))
         .agg(count(lit(1)).as("total"), sum(col("__kept")).as("sampled"))
         .head()
       (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
@@ -147,7 +137,7 @@ final class Sampled private (
   def partitionCounts: DataFrame = {
     val kept =
       if (ratio >= 1.0) lit(1L)
-      else when(rand(config.seed) < lit(ratio), 1L).otherwise(0L)
+      else when(Sampled.keep(config), 1L).otherwise(0L)
     source
       .select(
         spark_partition_id().cast("long").as("partition_id"),
@@ -191,6 +181,13 @@ object Sampled {
   // `{root}/jobs` znode (RandomSamplingUtil.java:270-276) and is atomic,
   // unlike its read-increment-write.
   private val jobIds = new AtomicInteger(0)
+
+  /** The seeded Bernoulli keep-predicate `rand(seed) < p`: the data filter
+    * and every accounting tag are built from it, so they select the same
+    * rows, and [[graft.plans.SamplePushdown]] matches its shape.
+    */
+  private[graft] def keep(config: SamplingConfig): Column =
+    rand(config.seed) < lit(config.resolvedRatio)
 
   def apply(source: DataFrame, config: SamplingConfig): Sampled =
     new Sampled(source, config, jobIds.incrementAndGet(), System.nanoTime())

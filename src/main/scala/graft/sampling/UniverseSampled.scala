@@ -123,6 +123,15 @@ object UniverseSampled {
     */
   def scale(pct: Int): Double = RangeMod.toDouble / checked(pct)
 
+  /** Horvitz–Thompson scale-up of an additive aggregate over the
+    * `pct`-percent sample: `aggregate * scale(pct)`, the
+    * [[HtTwin.scaled]] argument.
+    */
+  def htScale(pct: Int): Column => Column = {
+    val s = lit(scale(pct))
+    aggregate => aggregate * s
+  }
+
   /** SQL literal of [[scale]] — e.g. "10.0", so `count(*) * 10.0` is a
     * DOUBLE in DuckDB exactly like Spark's `cnt * lit(10.0)`.
     */

@@ -74,8 +74,8 @@ object TextKVSink {
 object ReportSink {
 
   /** NaN/Infinity are not valid JSON number literals (a 0-row sample makes
-    * actualRate 0/0) — emit null so downstream parsers never see a broken
-    * file.
+    * errorRate's `sqrt(0.25 / sampled)` infinite) — emit null so downstream
+    * parsers never see a broken file.
     */
   private def num(d: Double): String = if (java.lang.Double.isFinite(d)) d.toString else "null"
 

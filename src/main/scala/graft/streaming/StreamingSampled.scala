@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
-import graft.sampling.SamplingConfig
+import graft.sampling.{Sampled, SamplingConfig}
 
 /** The sampling/AQP layer on Structured Streaming — the natural extension
   * the reference never had (its "state" was job metadata in ZooKeeper, not
@@ -39,7 +39,7 @@ object StreamingSampled {
     val p = cfg.resolvedRatio
     val sampled =
       if (p >= 1.0) events
-      else events.filter(rand(cfg.seed) < lit(p))
+      else events.filter(Sampled.keep(cfg))
     sampled
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDur), col(keyCol))
@@ -111,13 +111,12 @@ object StreamingSampled {
       keyCol: String,
       cfg: SamplingConfig): Dataset[(String, Long, Long, Double)] = {
     import spark.implicits._
-    val p = cfg.resolvedRatio
     // the keep decision is TAGGED (not filtered) so total and sampled come
     // from the same pass — the streaming twin of Sampled.counts
     val tagged = events
       .select(
         col(keyCol).cast("string").as("key"),
-        when(rand(cfg.seed) < lit(p), 1L).otherwise(0L).as("kept"))
+        when(Sampled.keep(cfg), 1L).otherwise(0L).as("kept"))
       .as[(String, Long)]
     tagged
       .groupByKey(_._1)

@@ -147,7 +147,7 @@ object TextAnalysis {
 
   /** Corpus-level quality histogram: documents per 0.1-wide quality bucket
     * (bucket = floor(quality·10), so [0,1] → buckets 0..10). Count-shaped,
-    * which makes it a [[graft.queries.ReferenceQueries.sampled]] target: at
+    * which makes it a [[graft.sampling.HtTwin]] target: at
     * 100 TB the curation question "what does the quality distribution look
     * like?" is exactly where a 1 % seeded sample + HT scale-up answers in
     * 1 % of the scan cost with a T4-bounded error (the reference's AQP core,
@@ -535,30 +535,22 @@ object TextAnalysis {
        |FROM ratios$orderBy""".stripMargin
   }
 
-  /** DuckDB oracle for the universe-sampled [[qualityDistribution]] twin:
-    * the quality formula is identical IEEE arithmetic in both engines, so
-    * `floor(quality*10)` buckets agree bit-exactly, and the hash-range
-    * keep-set is deterministic — the sampled histogram is fully
-    * oracle-gated (unlike the `rand(seed)` r10 twin).
+  /** DuckDB oracle of [[qualityDistribution]] over the documents relation
+    * `from`: the quality formula is identical IEEE arithmetic in both
+    * engines, so `floor(quality*10)` buckets agree bit-exactly.
     */
-  def qualityDistributionSampledUOracleSql(pct: Int = 10): String = {
-    val inner = qualityScoreOracleSql(from = "src", ordered = false)
-    s"""WITH src AS (SELECT * FROM documents
-       |             WHERE ${graft.sampling.UniverseSampled.keepSql("doc_id", pct)}),
-       |q AS ($inner)
-       |SELECT CAST(floor(quality * 10) AS BIGINT) AS bucket,
-       |       count(*) * ${graft.sampling.UniverseSampled.scaleSql(pct)} AS est_cnt
+  def qualityDistributionOracleSql(from: String): String =
+    s"""WITH q AS (${qualityScoreOracleSql(from, ordered = false)})
+       |SELECT CAST(floor(quality * 10) AS BIGINT) AS bucket, count(*) AS cnt
        |FROM q GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
-  /** DuckDB oracle for the universe-sampled [[tokenTotals]] twin. */
-  def tokenTotalsSampledUOracleSql(pct: Int = 10): String =
+  /** DuckDB oracle of [[tokenTotals]] over the documents relation `from`. */
+  def tokenTotalsOracleSql(from: String): String =
     s"""SELECT 'Total' AS key,
        |       CAST(sum(CAST(len(regexp_extract_all(lower(text),
        |              '[a-z]+|[0-9]+|[^a-z0-9${graft.dedup.Hashing.WsChars}]')) AS BIGINT)) AS BIGINT)
-       |         * ${graft.sampling.UniverseSampled.scaleSql(pct)} AS est_total
-       |FROM documents
-       |WHERE ${graft.sampling.UniverseSampled.keepSql("doc_id", pct)}
+       |         AS total
+       |FROM $from
        |GROUP BY 1""".stripMargin
 
   def tokenCountsOracleSql: String =

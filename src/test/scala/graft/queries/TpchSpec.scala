@@ -3,9 +3,12 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sampling.SamplingConfig
+import graft.sampling.{HtTwin, Sampled, SamplingConfig, UniverseSampled}
 
 class TpchSpec extends SparkSpec {
+
+  private val Q1Additive =
+    Seq("sum_qty", "sum_base_price_c", "sum_disc_price_e4", "sum_charge_e6", "cnt")
 
   test("q1: six groups, cutoff filters rows, integer sums positive") {
     val out = TpchQueries.q1(Tables.lineitem(spark, sf01)).collect()
@@ -20,7 +23,8 @@ class TpchSpec extends SparkSpec {
   test("sampled q1: HT estimates track exact within sampling noise per group") {
     val exact = TpchQueries.q1(Tables.lineitem(spark, sf01))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(6).toDouble).toMap
-    val est = TpchQueries.q1Sampled(Tables.lineitem(spark, sf01), SamplingConfig(ratio = 0.1))
+    val s = Sampled(Tables.lineitem(spark, sf01), SamplingConfig(ratio = 0.1))
+    val est = HtTwin.scaled(TpchQueries.q1(s.data), s.htScale, Q1Additive)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(6))
     est.foreach { case (k, e) =>
       val x = exact(k)
@@ -33,7 +37,7 @@ class TpchSpec extends SparkSpec {
     val li = Tables.lineitem(spark, sf01)
     // unit atomicity: the keep-predicate is a function of l_orderkey alone,
     // so every order is wholly in or wholly out of the sample
-    val sampled = graft.sampling.UniverseSampled.sample(li, col("l_orderkey"), 10)
+    val sampled = UniverseSampled.sample(li, col("l_orderkey"), 10)
     val perOrder = sampled.groupBy("l_orderkey").count()
       .join(li.groupBy("l_orderkey").count().withColumnRenamed("count", "full"),
         "l_orderkey")
@@ -41,7 +45,7 @@ class TpchSpec extends SparkSpec {
       "a sampled order is missing some of its lineitems")
     val exact = TpchQueries.q1(li)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(6).toDouble).toMap
-    val est = TpchQueries.q1SampledUniverse(li)
+    val est = HtTwin.scaled(TpchQueries.q1(sampled), UniverseSampled.htScale(10), Q1Additive)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(6))
     assert(est.length === 6)
     est.foreach { case (k, e) =>
@@ -60,8 +64,8 @@ class TpchSpec extends SparkSpec {
         col("l_shipdate") < lit(TpchQueries.Q6End).cast("timestamp") &&
         col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
         col("l_quantity") < 24).count()
-    val est = TpchQueries.q6Sampled(
-      Tables.lineitem(spark, sf01), SamplingConfig(ratio = 0.1))
+    val s = Sampled(Tables.lineitem(spark, sf01), SamplingConfig(ratio = 0.1))
+    val est = HtTwin.scaled(TpchQueries.q6(s.data), s.htScale, Seq("revenue_e4"))
       .collect().head.getDouble(0)
     // rel-stddev ≈ √((1−p)/(p·n)); 4σ bound on the seeded sample
     val bound = 4.0 * math.sqrt(0.9 / (0.1 * n))

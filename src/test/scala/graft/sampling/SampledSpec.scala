@@ -93,7 +93,8 @@ class SampledSpec extends SparkSpec {
       keys: Seq[String],
       ratio: Double): Unit = {
     val exact = query(source)
-    val (s, est) = RQ.sampled(source, SamplingConfig(ratio = ratio), query)
+    val s = Sampled(source, SamplingConfig(ratio = ratio))
+    val est = HtTwin.scaled(query(s.data), s.htScale, Seq("cnt"))
     val err = ResultComparator.dataErrorRate(exact, est, keys)
 
     // CLT-derived bound on the L1 metric from the exact per-key counts.
@@ -142,7 +143,7 @@ class SampledSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf01)
     val exact = RQ.wordCount(docs)
     val s = Sampled(docs, SamplingConfig(ratio = 0.1))
-    val est = RQ.wordCount(s.data).withColumn("est_cnt", s.htScale(col("cnt"))).drop("cnt")
+    val est = HtTwin.scaled(RQ.wordCount(s.data), s.htScale, Seq("cnt"))
     val err = ResultComparator.dataErrorRate(exact, est, Seq("word"))
     // Word counts are per-line-sampled (cluster sampling of tokens), so the
     // per-record iid bound doesn't strictly apply to token counts; the

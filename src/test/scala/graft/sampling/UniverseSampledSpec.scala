@@ -43,7 +43,8 @@ class UniverseSampledSpec extends SparkSpec {
     // HT-scaled word-count total vs the exact total (corpus-level sums
     // concentrate; per-word counts are checked by the DuckDB oracle)
     val exact = RQ.wordCount(docs).agg(sum("cnt")).head().getLong(0).toDouble
-    val est = RQ.sampledUniverse(docs, col("doc_id"), 10, RQ.wordCount(_))
+    val est = HtTwin.scaled(RQ.wordCount(UniverseSampled.sample(docs, col("doc_id"), 10)),
+      UniverseSampled.htScale(10), Seq("cnt"))
       .agg(sum("est_cnt")).head().getDouble(0)
     assert(math.abs(est - exact) / exact < 0.1, s"est $est vs exact $exact")
   }
