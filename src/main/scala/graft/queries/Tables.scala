@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
 
 /** Loaders for the driver-generated parquet corpus (TESTDATA.md).
   *
@@ -26,13 +27,11 @@ object Tables {
   // CacheManager). Granularity is session-lifetime like [[floorDecisions]]:
   // inputs are immutable per run (TESTDATA.md); a path rewritten in-place
   // mid-session would serve a stale file list — batch contract, documented.
-  private val readCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // A stopped session's entries are dropped (see [[graft.SessionMemo]]).
+  private[graft] val readCache = new graft.SessionMemo[String, DataFrame](256)
 
-  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (readCache.size > 256) readCache.clear() // bound driver memory
-    readCache.getOrElseUpdate((spark, path(dir, name)), spark.read.parquet(path(dir, name)))
-  }
+  def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    readCache.getOrElseUpdate(spark, path(dir, name))(spark.read.parquet(path(dir, name)))
 
   /** Parallelism floor for CPU-heavy NARROW pipelines. A parquet split can
     * never be finer than a row group, so a single-row-group file arrives as
@@ -44,7 +43,7 @@ object Tables {
     * Applied at OPERATOR ENTRY — not in the table loaders — and therefore
     * ABOVE any sampling filter the caller composed: sample-then-parallelize,
     * so the exchange carries only surviving rows and a seeded `rand(seed)<p`
-    * filter still fuses into the scan. At production scale a big table
+    * keep filter still runs in the scan stage. At production scale a big table
     * arrives as thousands of splits and this is a no-op.
     */
   def parallelismFloor(df: DataFrame): DataFrame = {
@@ -53,22 +52,25 @@ object Tables {
   }
 
   // Deciding the floor needs the scan's partition count, which costs a full
-  // physical planning pass (`df.rdd`); memoized on the canonicalized
-  // logical plan so each distinct source shape pays it once per session.
+  // physical planning pass (`queryExecution.toRdd`: it plans but neither
+  // runs the final stage nor posts a SQL execution, so no
+  // QueryExecutionListener sees a plan that never ran); memoized on the
+  // canonicalized logical plan so each distinct source shape pays it once
+  // per session. Observation nodes are left out of the key: they do not
+  // change partitioning, and every Sampled carries its own, which would
+  // otherwise make each sampled run a miss.
   // Granularity is session-lifetime: a source that GROWS 16×+ while the
   // session lives keeps its original verdict until restart — acceptable
   // for batch jobs (sources are immutable per run); a long-lived service
   // over mutating tables should size inputs at ingest instead.
-  private val floorDecisions =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), Boolean]
+  private[graft] val floorDecisions = new graft.SessionMemo[(LogicalPlan, Int), Boolean](1024)
 
-  private def inputDeficient(df: DataFrame, target: Int): Boolean = {
-    if (floorDecisions.size > 1024) floorDecisions.clear() // bound driver memory
-    floorDecisions.getOrElseUpdate(
-      (df.queryExecution.logical.canonicalized, target),
-      df.rdd.getNumPartitions < math.max(2, target / 2))
-  }
+  private[graft] def floorKey(df: DataFrame, target: Int): (LogicalPlan, Int) =
+    (df.queryExecution.logical.transform { case c: CollectMetrics => c.child }.canonicalized, target)
+
+  private[graft] def inputDeficient(df: DataFrame, target: Int): Boolean =
+    floorDecisions.getOrElseUpdate(df.sparkSession, floorKey(df, target))(
+      df.queryExecution.toRdd.getNumPartitions < math.max(2, target / 2))
 
   /** 12-hex digest of `paths` AND the (relative name, length, mtime) of
     * every file under them — the cache key for derived artifacts (bucketed

@@ -66,18 +66,21 @@ object SamplingReport {
   *
   * Design notes for scale (100 TB / 1000 executors):
   *  - The keep/drop decision is `rand(seed) < p` — a codegen'd Catalyst
-  *    expression evaluated inside the scan stage, so rejected rows never
-  *    leave the scan's whole-stage-codegen loop (the moral equivalent of the
-  *    reference's read-and-discard loop, RandomizedLineRecordReader.java:67-81).
-  *    Catalyst pushes column pruning below it, so a sampled count scans zero
-  *    parquet columns.
-  *  - Accounting is ONE zero-column pass computing `(count(*), count kept)`
-  *    together — this replaces the reference's per-reader total counters
-  *    (and round 1's two separate counting jobs).
-  *  - Accounting deliberately does NOT use accumulators inside the data path:
-  *    task retries and speculative execution double-count accumulator updates
-  *    inside transformations; separate deterministic counting jobs cannot
-  *    (SURVEY.md §7.5).
+  *    expression evaluated inside the scan stage, projected as a boolean
+  *    keep tag right above the source and filtered on. Catalyst pushes
+  *    column pruning below it, so a sampled count scans zero parquet
+  *    columns.
+  *  - Accounting rides on the data job, as the reference's counters rode
+  *    inside its record readers (RandomizedLineRecordReader.java:86-94):
+  *    the tag is observed (`Dataset.observe`, `count(*)` and the number of
+  *    kept rows) before the filter, and [[report]] reads the counts of the
+  *    last complete execution of [[data]] ([[ObservedCounts]] says which
+  *    executions count as complete). Observed metrics are accumulators
+  *    with Spark's guarantees: a failed task attempt's updates are
+  *    dropped, so task retries stay exact; a re-run stage or speculative
+  *    task may add a partition twice, so such executions are not trusted.
+  *    Only when no trusted execution has finished does [[report]] run one
+  *    count over the observed plan, a zero-column scan.
   *  - `rand(seed)` is deterministic per (seed, partition index, row position),
   *    so the sampled row-set is reproducible run-to-run — an intentional fix
   *    of the reference's unseeded Random.
@@ -93,35 +96,34 @@ final class Sampled private (
   /** Effective designed probability after T5 resolution. */
   val ratio: Double = config.resolvedRatio
 
+  // one observation per instance, so a report reads only executions of
+  // this Sampled's own data
+  private val observation = s"graft_sampled_$jobId"
+  private val slot =
+    if (ratio >= 1.0) None else Some(ObservedCounts.register(source.sparkSession, observation))
+
   /** The sampled relation. Ratio 1.0 degenerates to the identity (no filter
-    * node at all, so exact mode pays zero overhead).
+    * node at all, so exact mode pays zero overhead). Otherwise the source
+    * gets the keep tag, the tag is observed, and the rows it rejects are
+    * filtered out; [[graft.plans.SamplePushdown]] moves the three below a
+    * projection the source ends in.
     */
   val data: DataFrame =
     if (ratio >= 1.0) source
-    else source.filter(Sampled.keep(config))
+    else source
+      .select(col("*"), Sampled.keep(config).as(Sampled.KeepTag))
+      .observe(observation, count(lit(1)).as("total"), count_if(col(Sampled.KeepTag)).as("sampled"))
+      .filter(col(Sampled.KeepTag))
+      .drop(Sampled.KeepTag)
 
-  /** Exact (total, sampled) cardinalities in ONE pass over the source: a
-    * single zero-column scan computes `count(*)` and the number of rows the
-    * seeded keep-predicate accepts (SURVEY.md §7.5's single-pass plan —
-    * halves the accounting input cost vs two scans at 100 TB).
-    *
-    * The `when(rand(seed) < p, …)` tag here selects the same row set as the
-    * filter in [[data]] because `rand(seed)` is deterministic per
-    * (seed, partition index, row position) and both jobs scan the same
-    * source with the same partitioning. This is asserted by SampledSpec.
+  private lazy val exactTotal = source.count()
+
+  /** Exact (total, sampled) cardinalities: those observed on a complete
+    * execution of [[data]], or one count of [[data]] when none has run.
     */
-  private lazy val counts: (Long, Long) = {
-    if (ratio >= 1.0) { val n = source.count(); (n, n) }
-    else {
-      // The nondeterministic tag must live in a projection (Catalyst rejects
-      // rand() inside aggregate arguments); the projection fuses into the
-      // scan stage, so this is still one pass.
-      val row = source
-        .select(when(Sampled.keep(config), 1L).otherwise(0L).as("__kept"))
-        .agg(count(lit(1)).as("total"), sum(col("__kept")).as("sampled"))
-        .head()
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-    }
+  private def counts: (Long, Long) = slot match {
+    case None => (exactTotal, exactTotal)
+    case Some(s) => ObservedCounts.counts(source.sparkSession, s)(data.count())
   }
 
   /** Per-partition accounting detail — S3 at full fidelity: the reference
@@ -155,7 +157,7 @@ final class Sampled private (
   /** Actual achieved sampling rate (what the reference computed from its
     * per-reader ZooKeeper counters, RandomSamplingUtil.java:306-315).
     */
-  def actualRatio: Double = if (totalCount == 0) 0.0 else sampledCount.toDouble / totalCount
+  def actualRatio: Double = { val (t, k) = counts; if (t == 0) 0.0 else k.toDouble / t }
 
   /** Horvitz–Thompson scale-up (Horvitz & Thompson, JASA 1952) of an
     * additive aggregate (count/sum) computed on the sampled data:
@@ -166,14 +168,19 @@ final class Sampled private (
     */
   def htScale(aggregate: Column): Column = aggregate / lit(ratio)
 
-  /** Post-run report (T6). Triggers the single accounting job. */
-  def report(): SamplingReport = SamplingReport(
-    jobId = jobId,
-    total = totalCount,
-    sampled = sampledCount,
-    designedRate = ratio,
-    confidence = config.confidence,
-    timeCostSec = (System.nanoTime() - startNanos) / 1e9)
+  /** Post-run report (T6). Runs no job when [[data]] has already been
+    * executed in full; otherwise one count of [[data]].
+    */
+  def report(): SamplingReport = {
+    val (total, sampled) = counts
+    SamplingReport(
+      jobId = jobId,
+      total = total,
+      sampled = sampled,
+      designedRate = ratio,
+      confidence = config.confidence,
+      timeCostSec = (System.nanoTime() - startNanos) / 1e9)
+  }
 }
 
 object Sampled {
@@ -182,12 +189,16 @@ object Sampled {
   // unlike its read-increment-write.
   private val jobIds = new AtomicInteger(0)
 
-  /** The seeded Bernoulli keep-predicate `rand(seed) < p`: the data filter
-    * and every accounting tag are built from it, so they select the same
-    * rows, and [[graft.plans.SamplePushdown]] matches its shape.
+  /** The seeded Bernoulli keep-predicate `rand(seed) < p`: the keep tag
+    * of [[Sampled.data]] and every accounting tag are built from it, so
+    * they select the same rows, and [[graft.plans.SamplePushdown]] matches
+    * its shape.
     */
   private[graft] def keep(config: SamplingConfig): Column =
     rand(config.seed) < lit(config.resolvedRatio)
+
+  /** The keep tag's column name inside [[Sampled.data]]'s plan. */
+  private val KeepTag = "__graft_keep"
 
   def apply(source: DataFrame, config: SamplingConfig): Sampled =
     new Sampled(source, config, jobIds.incrementAndGet(), System.nanoTime())

@@ -112,7 +112,8 @@ object StreamingSampled {
       cfg: SamplingConfig): Dataset[(String, Long, Long, Double)] = {
     import spark.implicits._
     // the keep decision is TAGGED (not filtered) so total and sampled come
-    // from the same pass — the streaming twin of Sampled.counts
+    // from the same pass — the streaming twin of the keep tag Sampled.data
+    // observes
     val tagged = events
       .select(
         col(keyCol).cast("string").as("key"),

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, LessThan, Rand}
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
@@ -20,14 +21,19 @@ class SamplePushdownSpec extends SparkSpec {
 
   private def filterIsBelowProject(plan: LogicalPlan): Boolean = {
     // after pushdown nothing COMPUTED sits below the Filter — only the
-    // relation, possibly behind the input-parallelism Repartition and
-    // column-pruning (attribute-only) Projects
+    // relation, possibly behind the input-parallelism Repartition,
+    // column-pruning (attribute-only) Projects, and a Sampled's keep tag
+    // (`rand < p AS tag`, the one computed column allowed) and observation
     def pierce(p: LogicalPlan): LogicalPlan = p match {
       case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => pierce(r.child)
       case pr: Project
-          if pr.projectList.forall(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.AttributeReference]) =>
+          if pr.projectList.forall {
+            case _: AttributeReference => true
+            case Alias(LessThan(_: Rand, _), _) => true
+            case _ => false
+          } =>
         pierce(pr.child)
+      case c: CollectMetrics => pierce(c.child)
       case other => other
     }
     val filters = plan.collect { case f: Filter => f }
@@ -58,6 +64,25 @@ class SamplePushdownSpec extends SparkSpec {
     assert(filterIsBelowProject(s.data.queryExecution.optimizedPlan))
     // accounting still agrees with the data filter
     assert(s.sampledCount === s.data.count())
+  }
+
+  test("Sampled over a projected source, filtered on a computed column: " +
+    "the parse stays above the observation, same rows and counts as sampling first") {
+    val docs = Tables.documents(spark, sf001)
+    val cfg = SamplingConfig(ratio = 0.3)
+    val s = Sampled(expensiveProjection(docs), cfg)
+    val q = s.data.filter(col("devoweled").startsWith("th"))
+    val plan = q.queryExecution.optimizedPlan
+    val parsedBelow = plan.collect { case c: CollectMetrics =>
+      c.child.exists(_.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.RegExpReplace])))
+    }
+    assert(parsedBelow === Seq(false), plan.toString)
+    val manual = expensiveProjection(Sampled(docs, cfg).data).filter(col("devoweled").startsWith("th"))
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(ids(q) === ids(manual) && ids(q).nonEmpty)
+    val rpt = s.report()
+    assert((rpt.total, rpt.sampled) === ((docs.count(), s.data.count())))
   }
 
   test("guard: predicates referencing columns are NOT touched") {

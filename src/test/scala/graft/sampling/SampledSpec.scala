@@ -17,16 +17,80 @@ import graft.queries.{ReferenceQueries => RQ, Tables}
   */
 class SampledSpec extends SparkSpec {
 
+  /** Jobs started while `body` ran, and its result. */
+  private def jobs[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftListenerBridge.drain(sc)
+      (started.get, r)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `s.report()`'s counts, whether it ran a job, and the truth. */
+  private def reported(s: Sampled) = {
+    val (n, rpt) = jobs(s.report())
+    ((rpt.total, rpt.sampled), n > 0, (s.source.count(), s.data.count()))
+  }
+
   test("sampled accounting: single pass agrees with the data filter's row set") {
     val docs = Tables.documents(spark, sf01)
     val s = Sampled(docs, SamplingConfig(ratio = 0.1))
-    // The accounting job's when(rand<p) tag must select exactly the rows
-    // the data filter keeps — same seed, same scan partitioning.
+    // The observed keep tag must count exactly the rows the data filter
+    // keeps: it is the column the filter reads.
     assert(s.sampledCount === s.data.count())
     assert(s.totalCount === docs.count())
     assert(s.sampledCount > 0 && s.sampledCount < s.totalCount)
     // achieved rate lands near the designed rate
     assert(math.abs(s.actualRatio - 0.1) < 0.05)
+  }
+
+  test("report before any action: one recount") {
+    val s = Sampled(Tables.documents(spark, sf01), SamplingConfig(ratio = 0.1))
+    val (counts, recounted, truth) = reported(s)
+    assert(counts === truth && recounted)
+  }
+
+  test("report after a full action reads its observation: no job") {
+    val s = Sampled(Tables.documents(spark, sf01), SamplingConfig(ratio = 0.1))
+    RQ.wordCount(s.data).collect() // passes the parallelism floor first
+    val (counts, recounted, truth) = reported(s)
+    assert(counts === truth && !recounted)
+  }
+
+  test("report after a limit: the partial observation is not trusted") {
+    val s = Sampled(Tables.documents(spark, sf01).repartition(4), SamplingConfig(ratio = 0.1))
+    s.data.limit(3).collect()
+    val (counts, recounted, truth) = reported(s)
+    assert(counts === truth && recounted)
+  }
+
+  test("report after a floor pass alone: the floor runs nothing, so one recount") {
+    val s = Sampled(Tables.documents(spark, sf01), SamplingConfig(ratio = 0.1))
+    Tables.parallelismFloor(s.data)
+    val (counts, recounted, truth) = reported(s)
+    assert(counts === truth && recounted)
+  }
+
+  test("report after a self-join of data: the complete side is read, no job") {
+    val s = Sampled(Tables.documents(spark, sf01), SamplingConfig(ratio = 0.1))
+    s.data.join(s.data, "doc_id").count()
+    val (counts, recounted, truth) = reported(s)
+    assert(counts === truth && !recounted)
+  }
+
+  test("a report reads only its own Sampled's executions") {
+    val docs = Tables.documents(spark, sf01)
+    Sampled(docs, SamplingConfig(ratio = 0.1)).data.collect()
+    val (counts, recounted, truth) = reported(Sampled(docs, SamplingConfig(ratio = 0.1)))
+    assert(counts === truth && recounted)
   }
 
   test("per-partition accounting: roll-up equals the aggregate counts, " +
