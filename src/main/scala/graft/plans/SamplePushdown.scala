@@ -1,9 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeSet, Expression, LessThan, LessThanOrEqual, Literal, NamedExpression, PredicateHelper, Rand}
-import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, LessThan, LessThanOrEqual, Literal, Rand}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+
+import graft.sampling.SampleKeep
 
 /** Sampling pushdown below projections — the Catalyst-native version of the
   * reference's "skip before parse" optimization (its XML reader seeks past
@@ -31,17 +33,15 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * offsets, which would select a different (equally valid, but not
   * identical) sample — determinism is part of this engine's contract.
   *
-  * [[graft.sampling.Sampled]] writes its sample as a keep tag
-  * (`rand(seed) < p AS tag`) in a projection, an observation of the tag
-  * (its `(total, sampled)` accounting) and a filter on the tag. Once
-  * Catalyst has collapsed the tag into the source's own projection, the
-  * rule moves that projection's computed columns above the filter:
-  * `Filter(tag ∧ rest, Observe(Project(es :+ tag, c)))` ≡
-  * `Filter(rest, Project(es :+ tag, Filter(tag, Observe(Project(c :+ tag, c)))))`.
-  * The observation still sees every row of `c` (1:1 with the projection's
-  * rows) and its metrics read only the tag, so the counts are unchanged.
+  * A [[graft.sampling.Sampled]] sample is a [[SampleKeep]] node (the same
+  * predicate, plus its tally) and moves the same way, below a projection
+  * that computes a column: `SampleKeep(Project(es, c))` ≡
+  * `Project(es, SampleKeep(c))`. The node reads every row of `c` that it
+  * read of the projection, so its counts are unchanged. A projection of
+  * bare columns stays where it is: moving the node below the ones column
+  * pruning puts under it would only undo them.
   */
-object SamplePushdown extends Rule[LogicalPlan] with PredicateHelper {
+object SamplePushdown extends Rule[LogicalPlan] {
 
   /** A pure Bernoulli sample predicate: `rand(seed) < lit` (or `<=`),
     * referencing no input columns.
@@ -52,32 +52,13 @@ object SamplePushdown extends Rule[LogicalPlan] with PredicateHelper {
     case _ => false
   }
 
-  /** The keep tag of a projection: its one nondeterministic entry, a
-    * sample predicate, next to at least one computed deterministic column
-    * worth moving above the sample.
-    */
-  private object KeepTagged {
-    def unapply(exprs: Seq[NamedExpression]): Option[Alias] = exprs.filterNot(_.deterministic) match {
-      case Seq(tag @ Alias(pred, _)) if isSamplePredicate(pred) &&
-          exprs.exists(e => e.deterministic && !e.isInstanceOf[Attribute]) => Some(tag)
-      case _ => None
-    }
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case Filter(cond, Project(exprs, child))
         if isSamplePredicate(cond) && exprs.forall(_.deterministic) =>
       Project(exprs, Filter(cond, child))
-    case f @ Filter(cond, observe @ CollectMetrics(_, metrics, Project(exprs @ KeepTagged(tag), child), _)) =>
-      val onTag = AttributeSet(tag.toAttribute)
-      val (keep, rest) = splitConjunctivePredicates(cond).partition(_.references.subsetOf(onTag))
-      if (keep.isEmpty || !metrics.forall(_.references.subsetOf(onTag))) f
-      else {
-        val sampled = Filter(keep.reduce(And),
-          observe.copy(child = Project(child.output :+ tag, child)))
-        val projected = Project(exprs.map(e => if (e eq tag) tag.toAttribute else e), sampled)
-        if (rest.isEmpty) projected else Filter(rest.reduce(And), projected)
-      }
+    case k @ SampleKeep(_, _, _, Project(exprs, child))
+        if exprs.forall(_.deterministic) && exprs.exists(!_.isInstanceOf[Attribute]) =>
+      Project(exprs, k.copy(child = child))
   }
 }
 

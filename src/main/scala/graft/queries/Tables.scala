@@ -1,7 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+
+import graft.sampling.SampleKeep
 
 /** Loaders for the driver-generated parquet corpus (TESTDATA.md).
   *
@@ -56,9 +58,10 @@ object Tables {
   // runs the final stage nor posts a SQL execution, so no
   // QueryExecutionListener sees a plan that never ran); memoized on the
   // canonicalized logical plan so each distinct source shape pays it once
-  // per session. Observation nodes are left out of the key: they do not
-  // change partitioning, and every Sampled carries its own, which would
-  // otherwise make each sampled run a miss.
+  // per session. A sample's tally is left out of the key (its node is keyed
+  // as a filter on the same predicate): it does not change partitioning,
+  // and every Sampled carries its own, which would otherwise make each
+  // sampled run a miss.
   // Granularity is session-lifetime: a source that GROWS 16×+ while the
   // session lives keeps its original verdict until restart — acceptable
   // for batch jobs (sources are immutable per run); a long-lived service
@@ -66,7 +69,7 @@ object Tables {
   private[graft] val floorDecisions = new graft.SessionMemo[(LogicalPlan, Int), Boolean](1024)
 
   private[graft] def floorKey(df: DataFrame, target: Int): (LogicalPlan, Int) =
-    (df.queryExecution.logical.transform { case c: CollectMetrics => c.child }.canonicalized, target)
+    (df.queryExecution.logical.transform { case k: SampleKeep => Filter(k.cond, k.child) }.canonicalized, target)
 
   private[graft] def inputDeficient(df: DataFrame, target: Int): Boolean =
     floorDecisions.getOrElseUpdate(df.sparkSession, floorKey(df, target))(

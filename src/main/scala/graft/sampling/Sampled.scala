@@ -2,7 +2,7 @@ package graft.sampling
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** Post-run sampling report — same fields and formatting as the reference's
@@ -66,21 +66,21 @@ object SamplingReport {
   *
   * Design notes for scale (100 TB / 1000 executors):
   *  - The keep/drop decision is `rand(seed) < p` — a codegen'd Catalyst
-  *    expression evaluated inside the scan stage, projected as a boolean
-  *    keep tag right above the source and filtered on. Catalyst pushes
-  *    column pruning below it, so a sampled count scans zero parquet
-  *    columns.
+  *    expression evaluated inside the scan stage by a [[SampleKeep]] node,
+  *    so rejected rows never leave the scan's whole-stage-codegen loop (the
+  *    moral equivalent of the reference's read-and-discard loop,
+  *    RandomizedLineRecordReader.java:67-81). Catalyst pushes column
+  *    pruning below it, so a sampled count scans zero parquet columns.
   *  - Accounting rides on the data job, as the reference's counters rode
   *    inside its record readers (RandomizedLineRecordReader.java:86-94):
-  *    the tag is observed (`Dataset.observe`, `count(*)` and the number of
-  *    kept rows) before the filter, and [[report]] reads the counts of the
-  *    last complete execution of [[data]] ([[ObservedCounts]] says which
-  *    executions count as complete). Observed metrics are accumulators
-  *    with Spark's guarantees: a failed task attempt's updates are
-  *    dropped, so task retries stay exact; a re-run stage or speculative
-  *    task may add a partition twice, so such executions are not trusted.
-  *    Only when no trusted execution has finished does [[report]] run one
-  *    count over the observed plan, a zero-column scan.
+  *    the node counts the rows it reads and keeps, and each partition read
+  *    to its end adds its `(total, kept)` to a [[SampleTally]] (an
+  *    accumulator keyed by partition, so a re-run of a partition replaces
+  *    its entry instead of adding to it). [[report]] sums the tally once
+  *    every partition of the data has been read; until then (no action
+  *    yet, only a limit, data served from a cache built elsewhere) it runs
+  *    one aggregate over the source instead: a zero-column pass computing
+  *    `count(*)` and the rows the same keep-predicate accepts.
   *  - `rand(seed)` is deterministic per (seed, partition index, row position),
   *    so the sampled row-set is reproducible run-to-run — an intentional fix
   *    of the reference's unseeded Random.
@@ -96,35 +96,42 @@ final class Sampled private (
   /** Effective designed probability after T5 resolution. */
   val ratio: Double = config.resolvedRatio
 
-  // one observation per instance, so a report reads only executions of
-  // this Sampled's own data
-  private val observation = s"graft_sampled_$jobId"
-  private val slot =
-    if (ratio >= 1.0) None else Some(ObservedCounts.register(source.sparkSession, observation))
+  // one tally per instance, so a report reads only runs of this Sampled's
+  // own data
+  private val tally = if (ratio >= 1.0) None else Some(SampleKeep.tally(source.sparkSession))
 
   /** The sampled relation. Ratio 1.0 degenerates to the identity (no filter
-    * node at all, so exact mode pays zero overhead). Otherwise the source
-    * gets the keep tag, the tag is observed, and the rows it rejects are
-    * filtered out; [[graft.plans.SamplePushdown]] moves the three below a
-    * projection the source ends in.
+    * node at all, so exact mode pays zero overhead).
     */
-  val data: DataFrame =
-    if (ratio >= 1.0) source
-    else source
-      .select(col("*"), Sampled.keep(config).as(Sampled.KeepTag))
-      .observe(observation, count(lit(1)).as("total"), count_if(col(Sampled.KeepTag)).as("sampled"))
-      .filter(col(Sampled.KeepTag))
-      .drop(Sampled.KeepTag)
-
-  private lazy val exactTotal = source.count()
-
-  /** Exact (total, sampled) cardinalities: those observed on a complete
-    * execution of [[data]], or one count of [[data]] when none has run.
-    */
-  private def counts: (Long, Long) = slot match {
-    case None => (exactTotal, exactTotal)
-    case Some(s) => ObservedCounts.counts(source.sparkSession, s)(data.count())
+  val data: DataFrame = tally match {
+    case None => source
+    case Some(t) => SampleKeep(source, config.seed, ratio, t)
   }
+
+  /** Exact (total, sampled) cardinalities in ONE pass over the source,
+    * when the data has not been read in full: a single zero-column scan
+    * computes `count(*)` and the number of rows the seeded keep-predicate
+    * accepts. The `when(rand(seed) < p, …)` tag selects the same row set as
+    * [[data]] because `rand(seed)` is deterministic per (seed, partition
+    * index, row position) and both jobs scan the same source with the same
+    * partitioning. This is asserted by SampledSpec.
+    */
+  private lazy val recounted: (Long, Long) = {
+    if (ratio >= 1.0) { val n = source.count(); (n, n) }
+    else {
+      // The nondeterministic tag must live in a projection (Catalyst rejects
+      // rand() inside aggregate arguments); the projection fuses into the
+      // scan stage, so this is still one pass.
+      val row = source
+        .select(when(Sampled.keep(config), 1L).otherwise(0L).as("__kept"))
+        .agg(count(lit(1)).as("total"), sum(col("__kept")).as("sampled"))
+        .head()
+      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+    }
+  }
+
+  /** Exact (total, sampled): the tally of a full read of [[data]], or the recount. */
+  private def counts: (Long, Long) = tally.flatMap(_.complete).getOrElse(recounted)
 
   /** Per-partition accounting detail — S3 at full fidelity: the reference
     * persisted a `(sampled, total)` pair PER RECORD READER (one znode per
@@ -169,7 +176,7 @@ final class Sampled private (
   def htScale(aggregate: Column): Column = aggregate / lit(ratio)
 
   /** Post-run report (T6). Runs no job when [[data]] has already been
-    * executed in full; otherwise one count of [[data]].
+    * read in full; otherwise the one-pass recount.
     */
   def report(): SamplingReport = {
     val (total, sampled) = counts
@@ -189,16 +196,12 @@ object Sampled {
   // unlike its read-increment-write.
   private val jobIds = new AtomicInteger(0)
 
-  /** The seeded Bernoulli keep-predicate `rand(seed) < p`: the keep tag
-    * of [[Sampled.data]] and every accounting tag are built from it, so
-    * they select the same rows, and [[graft.plans.SamplePushdown]] matches
-    * its shape.
+  /** The seeded Bernoulli keep-predicate `rand(seed) < p`: the
+    * [[SampleKeep]] of [[Sampled.data]] and every accounting tag evaluate
+    * this one expression, so they select the same rows.
     */
   private[graft] def keep(config: SamplingConfig): Column =
-    rand(config.seed) < lit(config.resolvedRatio)
-
-  /** The keep tag's column name inside [[Sampled.data]]'s plan. */
-  private val KeepTag = "__graft_keep"
+    GraftColumnBridge.column(SampleKeep.predicate(config.seed, config.resolvedRatio))
 
   def apply(source: DataFrame, config: SamplingConfig): Sampled =
     new Sampled(source, config, jobIds.incrementAndGet(), System.nanoTime())

@@ -112,8 +112,8 @@ object StreamingSampled {
       cfg: SamplingConfig): Dataset[(String, Long, Long, Double)] = {
     import spark.implicits._
     // the keep decision is TAGGED (not filtered) so total and sampled come
-    // from the same pass — the streaming twin of the keep tag Sampled.data
-    // observes
+    // from the same pass — the streaming twin of the counts Sampled.data
+    // tallies per partition
     val tagged = events
       .select(
         col(keyCol).cast("string").as("key"),

@@ -1,17 +1,10 @@
 package org.apache.spark
 
-import org.apache.spark.scheduler.SparkListenerEvent
-
-/** The `private[spark]` listener-bus access graft needs. [[drain]] blocks
-  * until the bus has delivered every queued event, so a stage recorder
-  * ([[graft.tools.Measure]]) sees all of the work it wrapped instead of
-  * whatever arrived before a fixed sleep ran out. [[post]] queues an event
-  * behind everything posted so far, so a listener that receives it has
-  * already seen every earlier event of its queue
-  * ([[graft.sampling.ObservedCounts]]).
+/** The `private[spark]` access [[graft.tools.Measure]] needs: block until
+  * the listener bus has delivered every queued event, so a stage recorder
+  * sees all of the work it wrapped instead of whatever arrived before a
+  * fixed sleep ran out.
   */
 object GraftListenerBridge {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-
-  def post(sc: SparkContext, event: SparkListenerEvent): Unit = sc.listenerBus.post(event)
 }

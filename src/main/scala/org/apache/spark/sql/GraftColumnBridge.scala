@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The ONE `private[sql]`-access bridge graft uses: wrap a Catalyst
   * expression into a user-facing [[Column]] without the function
@@ -13,10 +14,13 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * literal child: a 2 MB binary literal's 4 MB hex gets re-rendered into
   * the plan description by the driver on every execution — measured
   * ~180 s CPU per bench entry, jstack-attributed to
-  * `ExplainUtils`/`stripMargin`) needs direct construction.
+  * `ExplainUtils`/`stripMargin`) needs direct construction. A logical
+  * node of graft's own ([[graft.sampling.SampleKeep]], which carries its
+  * tally) is wrapped into a [[DataFrame]] the same way.
   *
   * Delegates to [[org.apache.spark.sql.classic.ExpressionUtils]] — the
-  * same helper Spark's own Column functions compile down to.
+  * same helper Spark's own Column functions compile down to — and to
+  * `classic.Dataset.ofRows`.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column =
@@ -24,4 +28,8 @@ object GraftColumnBridge {
 
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

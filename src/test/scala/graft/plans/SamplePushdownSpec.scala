@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, LessThan, Rand}
-import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.queries.Tables
-import graft.sampling.{Sampled, SamplingConfig}
+import graft.sampling.{SampleKeep, Sampled, SamplingConfig}
 
 /** The sample-pushdown rule: plan shape, row-set identity, and the
   * non-applicability guards.
@@ -20,24 +20,18 @@ class SamplePushdownSpec extends SparkSpec {
       regexp_replace(lower(col("text")), "[aeiou]", "_").as("devoweled"))
 
   private def filterIsBelowProject(plan: LogicalPlan): Boolean = {
-    // after pushdown nothing COMPUTED sits below the Filter — only the
-    // relation, possibly behind the input-parallelism Repartition,
-    // column-pruning (attribute-only) Projects, and a Sampled's keep tag
-    // (`rand < p AS tag`, the one computed column allowed) and observation
+    // after pushdown nothing COMPUTED sits below the sample (a Filter, or a
+    // Sampled's SampleKeep) — only the relation, possibly behind the
+    // input-parallelism Repartition and column-pruning (attribute-only)
+    // Projects
     def pierce(p: LogicalPlan): LogicalPlan = p match {
       case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => pierce(r.child)
-      case pr: Project
-          if pr.projectList.forall {
-            case _: AttributeReference => true
-            case Alias(LessThan(_: Rand, _), _) => true
-            case _ => false
-          } =>
+      case pr: Project if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
         pierce(pr.child)
-      case c: CollectMetrics => pierce(c.child)
       case other => other
     }
-    val filters = plan.collect { case f: Filter => f }
-    filters.nonEmpty && filters.forall(f => pierce(f.child).isInstanceOf[LogicalRelation])
+    val samples = plan.collect { case f: Filter => f.child; case k: SampleKeep => k.child }
+    samples.nonEmpty && samples.forall(pierce(_).isInstanceOf[LogicalRelation])
   }
 
   test("sample filter written above a projection is pushed below it") {
@@ -67,14 +61,14 @@ class SamplePushdownSpec extends SparkSpec {
   }
 
   test("Sampled over a projected source, filtered on a computed column: " +
-    "the parse stays above the observation, same rows and counts as sampling first") {
+    "the parse stays above the sample, same rows and counts as sampling first") {
     val docs = Tables.documents(spark, sf001)
     val cfg = SamplingConfig(ratio = 0.3)
     val s = Sampled(expensiveProjection(docs), cfg)
     val q = s.data.filter(col("devoweled").startsWith("th"))
     val plan = q.queryExecution.optimizedPlan
-    val parsedBelow = plan.collect { case c: CollectMetrics =>
-      c.child.exists(_.expressions.exists(_.exists(
+    val parsedBelow = plan.collect { case k: SampleKeep =>
+      k.child.exists(_.expressions.exists(_.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.RegExpReplace])))
     }
     assert(parsedBelow === Seq(false), plan.toString)

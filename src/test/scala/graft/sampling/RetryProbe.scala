@@ -4,17 +4,16 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{GraftFaults, GraftListenerBridge, Success, TaskContext}
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{GraftExecutionBridge, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.BooleanType
 
@@ -32,7 +31,7 @@ import graft.queries.{ReferenceQueries => RQ, Tables}
   * Two injectors:
   *  - every file scan of the session is wrapped in an always-true filter
   *    that, while [[failTasks]] is set, fails the first attempt of each
-  *    task on its [[FailAt]]-th row, after earlier rows were observed;
+  *    task on its [[FailAt]]-th row, after earlier rows were sampled;
   *  - [[fetchFailOnce]], placed in a query's result stage, reports the
   *    last shuffle as lost once, so the scheduler re-runs its map stages
   *    as stage attempt 1.
@@ -74,13 +73,13 @@ object RetryProbe {
     true
   }.asNondeterministic()
 
-  /** Jobs, failed tasks, stage re-attempts and the action of every SQL
-    * execution since the last [[reset]].
+  /** Jobs, failed tasks, stage re-attempts and accounting recounts since
+    * the last [[reset]]. A recount is the one SQL execution that evaluates
+    * the keep predicate (`rand`) outside a SampleKeep node.
     */
   private object Recorder extends SparkListener {
-    val actions = ArrayBuffer.empty[String]
-    @volatile var jobs, failedTasks, stageRetries = 0
-    def reset(): Unit = synchronized { actions.clear(); jobs = 0; failedTasks = 0; stageRetries = 0 }
+    @volatile var jobs, failedTasks, stageRetries, recounts = 0
+    def reset(): Unit = synchronized { jobs = 0; failedTasks = 0; stageRetries = 0; recounts = 0 }
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized(jobs += 1)
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
       GraftFaults.shuffleOf(e.stageInfo).foreach(lastShuffle = _)
@@ -90,8 +89,10 @@ object RetryProbe {
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       if (e.reason != Success) synchronized(failedTasks += 1)
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case end: SparkListenerSQLExecutionEnd =>
-        synchronized(actions += GraftExecutionBridge.action(end).getOrElse("?"))
+      case start: SparkListenerSQLExecutionStart
+          if start.physicalPlanDescription.contains("rand(") &&
+            !start.physicalPlanDescription.contains("SampleKeep") =>
+        synchronized(recounts += 1)
       case _ =>
     }
   }
@@ -144,7 +145,7 @@ object RetryProbe {
     // report before any action: one recount
     val early = Sampled(docs, cfg)
     val earlyRpt = recorded(spark)(early.report())
-    emit("early.actions", Recorder.actions.mkString(","))
+    emit("early.recounts", Recorder.recounts)
     emit("early.report", (earlyRpt.total, earlyRpt.sampled))
     emit("early.truth", truth(early))
 
@@ -156,6 +157,7 @@ object RetryProbe {
     val taskRpt = recorded(spark)(retried.report())
     emit("task.report", (taskRpt.total, taskRpt.sampled))
     emit("task.reportJobs", Recorder.jobs)
+    emit("task.recounts", Recorder.recounts)
     failTasks = false
     emit("task.truth", truth(retried))
 
@@ -164,8 +166,6 @@ object RetryProbe {
     val q = RQ.wordCount(rerun.data).filter(fetchFailOnce(col("word")))
     recorded(spark)(q.collect())
     emit("stage.retries", Recorder.stageRetries)
-    val raw = q.queryExecution.observedMetrics.values.head
-    emit("stage.observed", (raw.getLong(0), raw.getLong(1)))
     val stageRpt = recorded(spark)(rerun.report())
     emit("stage.report", (stageRpt.total, stageRpt.sampled))
     emit("stage.reportJobs", Recorder.jobs)
@@ -179,11 +179,11 @@ object RetryProbe {
       val tag = if (failing) "failing" else "clean"
       recorded(spark)(Main.runJob(spark, "randwordcount", dir,
         s"$scratch/main-$tag/out", None, cfg))
-      emit(s"main.$tag.actions", Recorder.actions.mkString(","))
+      emit(s"main.$tag.recounts", Recorder.recounts)
       emit(s"main.$tag.failedTasks", Recorder.failedTasks)
       recorded(spark)(RatioLadder.run(Tables.documents(spark, dir),
         RQ.wordCount(_), Seq("word"), Seq(0.1), s"$scratch/ladder-$tag"))
-      emit(s"ladder.$tag.actions", Recorder.actions.mkString(","))
+      emit(s"ladder.$tag.recounts", Recorder.recounts)
       emit(s"ladder.$tag.failedTasks", Recorder.failedTasks)
     }
     failTasks = false

@@ -35,34 +35,29 @@ class SampledRetrySpec extends AnyFunSuite {
 
   test("report before any action: one recount, equal to (source.count(), data.count())") {
     assert(probe("early.report") === probe("early.truth"))
-    assert(probe("early.actions") === "count")
+    assert(probe("early.recounts") === "1")
   }
 
-  test("task retry: first attempts fail mid-partition, the observed report stays exact, no recount") {
+  test("task retry: first attempts fail mid-partition, the tallied report stays exact, no recount") {
     assert(probe("task.failedTasks").toInt > 0)
     assert(probe("task.report") === probe("task.truth"))
     assert(probe("task.reportJobs") === "0")
+    assert(probe("task.recounts") === "0")
   }
 
-  test("stage re-attempt: the re-run map stage counts its rows twice, so the report recounts") {
-    info(s"observed ${probe("stage.observed")}, truth ${probe("stage.truth")}")
+  test("stage re-attempt: the re-run map stage tallies its partitions again, once each, no recount") {
     assert(probe("stage.retries").toInt > 0)
-    // the raw observation of the re-attempted execution over-counts ...
-    assert(probe("stage.observed") !== probe("stage.truth"))
-    // ... and the report does not use it
     assert(probe("stage.report") === probe("stage.truth"))
-    assert(probe("stage.reportJobs").toInt > 0)
+    assert(probe("stage.reportJobs") === "0")
   }
 
   test("Main.runJob and a RatioLadder rung: same output under first-attempt failures, no accounting job") {
     for (caller <- Seq("main", "ladder")) {
-      info(s"$caller: ${probe(s"$caller.failing.failedTasks")} failed tasks; " +
-        s"actions ${probe(s"$caller.failing.actions")}")
+      info(s"$caller: ${probe(s"$caller.failing.failedTasks")} failed tasks")
       assert(probe(s"$caller.failing.failedTasks").toInt > 0, caller)
       assert(probe(s"$caller.clean.failedTasks") === "0", caller)
       for (run <- Seq("clean", "failing"))
-        assert(!probe(s"$caller.$run.actions").split(",").contains("count"),
-          s"$caller $run ran an accounting count: ${probe(s"$caller.$run.actions")}")
+        assert(probe(s"$caller.$run.recounts") === "0", s"$caller $run ran an accounting recount")
       assert(probe(s"$caller.files").toInt >= 2, caller)
       assert(probe(s"$caller.identical") === "true", caller)
     }

@@ -43,8 +43,8 @@ class SampledSpec extends SparkSpec {
   test("sampled accounting: single pass agrees with the data filter's row set") {
     val docs = Tables.documents(spark, sf01)
     val s = Sampled(docs, SamplingConfig(ratio = 0.1))
-    // The observed keep tag must count exactly the rows the data filter
-    // keeps: it is the column the filter reads.
+    // The accounting job's when(rand<p) tag must select exactly the rows
+    // the data filter keeps — same seed, same scan partitioning.
     assert(s.sampledCount === s.data.count())
     assert(s.totalCount === docs.count())
     assert(s.sampledCount > 0 && s.sampledCount < s.totalCount)
@@ -58,16 +58,17 @@ class SampledSpec extends SparkSpec {
     assert(counts === truth && recounted)
   }
 
-  test("report after a full action reads its observation: no job") {
+  test("report after a full action reads its tally: no job") {
     val s = Sampled(Tables.documents(spark, sf01), SamplingConfig(ratio = 0.1))
     RQ.wordCount(s.data).collect() // passes the parallelism floor first
     val (counts, recounted, truth) = reported(s)
     assert(counts === truth && !recounted)
   }
 
-  test("report after a limit: the partial observation is not trusted") {
+  test("report after a limit: partitions stopped early are not counted") {
     val s = Sampled(Tables.documents(spark, sf01).repartition(4), SamplingConfig(ratio = 0.1))
-    s.data.limit(3).collect()
+    s.data.limit(3).collect() // the driver stops reading partitions
+    s.data.limit(3).count() // a limit in the sample's own codegen stage stops each one
     val (counts, recounted, truth) = reported(s)
     assert(counts === truth && recounted)
   }
@@ -84,6 +85,29 @@ class SampledSpec extends SparkSpec {
     s.data.join(s.data, "doc_id").count()
     val (counts, recounted, truth) = reported(s)
     assert(counts === truth && !recounted)
+  }
+
+  test("report after a cached read: the cache build read every partition, no job") {
+    val s = Sampled(Tables.documents(spark, sf01), SamplingConfig(ratio = 0.1))
+    s.data.cache()
+    try {
+      s.data.count()
+      val (counts, recounted, truth) = reported(s)
+      assert(counts === truth && !recounted)
+    } finally s.data.unpersist()
+  }
+
+  test("a partition read twice (a re-run or resubmitted map task) is tallied once") {
+    val t = SampleKeep.tally(spark)
+    val update = t.copyAndReset().asInstanceOf[SampleTally]
+    update.record(2, 0, 10L, 1L)
+    t.merge(update)
+    assert(t.complete === None)
+    t.merge(update) // the same partition's second successful attempt
+    update.reset()
+    update.record(2, 1, 7L, 2L)
+    t.merge(update)
+    assert(t.complete === Some((17L, 3L)))
   }
 
   test("a report reads only its own Sampled's executions") {
